@@ -11,9 +11,11 @@ only adapts it to the driver's interface.
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -22,22 +24,92 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from hadoop_jobanalyzer_spark.plans import registry as _registry  # noqa: E402
 
 SF0001 = "/root/testdata/sf0.001"
+_REPO_ROOT = Path(__file__).resolve().parent
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: multi-way broadcast join + exact-decimal aggregation
     (q03) over the sf0.001 star schema."""
     spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    return _registry.queries()["q03_region_revenue"](spark, SF0001)
+    return _registry.QUERIES["q03_region_revenue"][0](spark, SF0001)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator family from SURVEY.md §2 (plus the
-    LLM-data-pipeline operators)."""
-    return _registry.queries()
+    LLM-data-pipeline operators), in :func:`_priority_order`."""
+    qs = _registry.queries()
+    return {name: qs[name] for name in _priority_order(list(qs))}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL equivalents; keys missing here (relative to
     ``queries()``) are non-SQL-expressible and get the rows-only check."""
     return _registry.oracle_sql()
+
+
+# The driver's correctness gate records at most 50 queries per round, in
+# ``queries()`` iteration order (CORRECTNESS_r01.json stopped at exactly the
+# first 50 of 59).  To make the union of rounds cover everything AND keep
+# re-checking old greens against environment drift, order the queries:
+#   1. never-verified or red queries (new work + known breakage) first,
+#   2. then greens by ascending last-verified round (stalest first).
+# The history is read from the driver's own CORRECTNESS_r*.json artifacts
+# next to this file, so each round's ordering rotates automatically.
+
+
+def _verification_history() -> tuple[dict[str, int], set[str]]:
+    """(greens, reds): query name -> latest round the driver verified it
+    fully green (no error, rows+schema match, hash not a recorded
+    mismatch), plus the set of queries whose LATEST driver record is red.
+    A RED result in a round at or after the last green resets the query —
+    a fixed regression must re-verify immediately, not queue behind the
+    stale-green rotation."""
+    greens: dict[str, int] = {}
+    reds: dict[str, int] = {}
+    for p in sorted(_REPO_ROOT.glob("CORRECTNESS_r*.json")):
+        try:
+            rnd = int(p.stem.rsplit("_r", 1)[1])
+            data = json.loads(p.read_text())
+        except (ValueError, IndexError, OSError, json.JSONDecodeError):
+            continue
+        for name, rec in data.items():
+            if not isinstance(rec, dict):
+                continue
+            green = (
+                rec.get("err") is None
+                and rec.get("rows_match") is True
+                and rec.get("schema_match") is True
+                and rec.get("hash_match") is not False
+            )
+            if green:
+                greens[name] = max(rnd, greens.get(name, 0))
+            else:
+                reds[name] = max(rnd, reds.get(name, 0))
+    still_green = {
+        name: rnd
+        for name, rnd in greens.items()
+        if reds.get(name, -1) < rnd
+    }
+    still_red = {n for n in reds if n not in still_green}
+    return still_green, still_red
+
+
+def _priority_order(names: list[str]) -> list[str]:
+    """Known-red first (a fix must prove itself in the very next round),
+    then never-verified (new queries), then greens stalest-first. The
+    driver records only the first ~50 entries per round, so this
+    ordering decides what gets (re-)verified."""
+    greens, reds = _verification_history()
+
+    def num(n: str) -> int:
+        digits = "".join(ch for ch in n[1:] if ch.isdigit() or ch == "_").split("_")[0]
+        return int(digits) if digits.isdigit() else 10**9
+
+    def rank(n: str) -> tuple[int, int, int, str]:
+        if n in reds:
+            return (0, 0, num(n), n)
+        if n not in greens:
+            return (1, 0, num(n), n)
+        return (2, greens[n], num(n), n)
+
+    return sorted(names, key=rank)

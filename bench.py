@@ -4,7 +4,8 @@ print ONE JSON line {"metric", "value", "unit", "queries", "sf"}.
 
 Each query is forced with the `noop` writer (full execution, no driver-side
 collect) so the measured time is plan + shuffle + compute, which is what
-matters at cluster scale. AQE is on; shuffle partitions sized for local[N].
+matters at cluster scale. The session is ``session.get_spark``'s engine
+(the plans PLAN_AUDIT gates); shuffle partitions sized for local[N].
 """
 
 from __future__ import annotations
@@ -19,6 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import SparkSession
 
 from hadoop_jobanalyzer_spark.plans import registry
+from hadoop_jobanalyzer_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -37,27 +39,18 @@ def sf_from_dir(path: str) -> float:
         return -1.0
 
 
-def build_session() -> SparkSession:
-    builder = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("hja-spark-bench")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
+def session() -> SparkSession:
+    """The engine exactly as tests, tools and the driver get it
+    (``session.get_spark``), at local[CPUS] with CPUS shuffle partitions."""
+    return get_spark(
+        app_name="hja-spark-bench",
+        master=f"local[{CPUS}]",
+        shuffle_partitions=int(CPUS),
+        extra_conf={
+            "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "8g"),
+            "spark.ui.enabled": "false",
+        },
     )
-    # opt-in AQE initial-partition ceiling for scale runs (see
-    # session.ENGINE_CONF's rationale; not defaulted — a blanket 512
-    # measured +21% at sf0.1)
-    init_parts = os.environ.get("SPARK_GRAFT_INIT_PARTITIONS")
-    if init_parts:
-        builder = builder.config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum", init_parts
-        )
-    return builder.getOrCreate()
 
 
 def ratios_vs_committed(timings: dict[str, float]) -> dict | None:
@@ -127,7 +120,7 @@ def ratios_vs_committed(timings: dict[str, float]) -> dict | None:
 
 
 def main() -> None:
-    spark = build_session()
+    spark = session()
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
 

@@ -27,7 +27,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from hadoop_jobanalyzer_spark.functions.counters import counter_value
-from hadoop_jobanalyzer_spark.sources.job_history import HistoryViews, final_attempts
+from hadoop_jobanalyzer_spark.sources.job_history import (
+    HistoryViews,
+    error_class,
+    final_attempts,
+)
 
 _JOB_KEY = ["source_file", "jobid"]
 
@@ -223,13 +227,6 @@ def error_summary(views: HistoryViews) -> DataFrame:
     raw (backslash-escaped) ERROR value, unescaped for display; attempts
     that died without an ERROR attribute group under NULL.
     """
-    klass = F.regexp_replace(
-        F.regexp_extract(
-            F.col("error"), r"([\w$]+(?:\\\.[\w$]+)*(?:Exception|Error))", 1
-        ),
-        r"\\\.",
-        ".",
-    )
     return (
         views.attempts.filter(
             F.col("task_status").isin("FAILED", "KILLED") | F.col("error").isNotNull()
@@ -238,7 +235,7 @@ def error_summary(views: HistoryViews) -> DataFrame:
             *_JOB_KEY,
             "task_type",
             "task_status",
-            F.when(klass != "", klass).alias("error_class"),
+            error_class(F.col("error")).alias("error_class"),
             "attempt_id",
         )
         .groupBy(*_JOB_KEY, "task_type", "task_status", "error_class")

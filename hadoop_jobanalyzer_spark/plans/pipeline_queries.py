@@ -48,7 +48,7 @@ from hadoop_jobanalyzer_spark.operators.similarity import (
     lsh_buckets,
 )
 from hadoop_jobanalyzer_spark.functions.vectors import hyperplanes
-from hadoop_jobanalyzer_spark.plans.tables import load_tables
+from hadoop_jobanalyzer_spark.plans.tables import load_tables, session_cached
 from hadoop_jobanalyzer_spark.util import capture_plan, materialize, spread
 
 _WORDS = "string_split(text, ' ')"
@@ -170,13 +170,6 @@ ORDER BY id_a, id_b
 """
 
 
-import weakref as _weakref
-
-_DEDUP_CACHE: "_weakref.WeakKeyDictionary[SparkSession, dict[str, tuple[DataFrame, DataFrame]]]" = (
-    _weakref.WeakKeyDictionary()
-)
-
-
 def corpus_dedup(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(verified near-dup pairs, connected-component labels) for the
     standard corpus dedup config (8 hashes x 4 bands, 3-gram shingles,
@@ -187,58 +180,38 @@ def corpus_dedup(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
     the dedup-cluster table is materialized once per corpus snapshot and
     every downstream pipeline joins it, not re-runs LSH.  The pairs are
     ``.persist()``-ed (deliberate bounded session cache, like the
-    co-purchase edge table); the CC labels are already materialized by the
-    iteration's materialize steps.
+    co-purchase edge table; ``tables.release_session_caches`` evicts it);
+    the CC labels are already materialized by the iteration's materialize
+    steps.
     """
-    per = _DEDUP_CACHE.setdefault(spark, {})
-    if sf_dir not in per:
-        from hadoop_jobanalyzer_spark.operators.graph import connected_components
-
-        docs = load_tables(spark, sf_dir)["documents"]
-        pairs = near_dup_pairs(
-            docs, "doc_id", "text",
-            n_hashes=_N_HASHES, bands=_BANDS, ngram=3, threshold=0.2,
-        )
-        capture_plan(pairs)  # persist hides the build plan from consumers
-        pairs = pairs.persist()
-        cc = connected_components(
-            pairs.select("id_a", "id_b"), src="id_a", dst="id_b",
-            nodes=docs.select(F.col("doc_id").alias("id")), id_col="id",
-        )
-        # CC now loops over edge endpoints only and appends the isolated
-        # docs via an anti-join; materialize the assembled labeling so
-        # the five consumers read blocks (as they did when the loop's
-        # last checkpoint WAS the full labeling) instead of re-running
-        # the corpus-side anti-join each.
-        cc = cc.transform(materialize)
-        per[sf_dir] = (pairs, cc)
-    return per[sf_dir]
+    return session_cached(
+        spark, "corpus_dedup", sf_dir, lambda: _build_corpus_dedup(spark, sf_dir)
+    )
 
 
-def release_corpus_dedup(spark: SparkSession, sf_dir: str | None = None) -> int:
-    """Evict the session's materialized dedup subtree(s): unpersist the
-    pairs table and drop the cache entry, for one ``sf_dir`` or all of
-    them. The session cache is deliberately unbounded across corpus dirs
-    (each entry is small — verified pairs, not signatures), so a driver
-    that visits many corpus snapshots in one session calls this between
-    snapshots instead of accumulating a cache per dir. Returns the number
-    of entries released.
+def _build_corpus_dedup(
+    spark: SparkSession, sf_dir: str
+) -> tuple[tuple[DataFrame, DataFrame], list[DataFrame]]:
+    from hadoop_jobanalyzer_spark.operators.graph import connected_components
 
-    Bench note: the FIRST consumer of a given (session, sf_dir) pays the
-    LSH build (q34/q40/q68/q71/q204 share the subtree) — per-query
-    timings for that family are ordering-dependent by design; compare
-    the family's total, or release between queries to measure cold."""
-    per = _DEDUP_CACHE.get(spark)
-    if not per:
-        return 0
-    keys = [sf_dir] if sf_dir is not None else list(per)
-    n = 0
-    for k in keys:
-        entry = per.pop(k, None)
-        if entry is not None:
-            entry[0].unpersist()
-            n += 1
-    return n
+    docs = load_tables(spark, sf_dir)["documents"]
+    pairs = near_dup_pairs(
+        docs, "doc_id", "text",
+        n_hashes=_N_HASHES, bands=_BANDS, ngram=3, threshold=0.2,
+    )
+    capture_plan(pairs)  # persist hides the build plan from consumers
+    pairs = pairs.persist()
+    cc = connected_components(
+        pairs.select("id_a", "id_b"), src="id_a", dst="id_b",
+        nodes=docs.select(F.col("doc_id").alias("id")), id_col="id",
+    )
+    # CC now loops over edge endpoints only and appends the isolated
+    # docs via an anti-join; materialize the assembled labeling so
+    # the five consumers read blocks (as they did when the loop's
+    # last checkpoint WAS the full labeling) instead of re-running
+    # the corpus-side anti-join each.
+    cc = cc.transform(materialize)
+    return (pairs, cc), [pairs]
 
 
 def write_dedup_clusters_bucketed(

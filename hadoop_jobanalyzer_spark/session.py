@@ -46,12 +46,7 @@ ENGINE_CONF: dict[str, str] = {
 # SPARK_GRAFT_INIT_PARTITIONS; the init-partition ceiling is NOT
 # defaulted high because a blanket 512 measured +21% on the sf0.1 bench
 # subset (localCheckpoint pins the pre-coalesce partition count through
-# iterative loops — q197 3x worse).
-_INIT_PARTITIONS = os.environ.get("SPARK_GRAFT_INIT_PARTITIONS")
-if _INIT_PARTITIONS:
-    ENGINE_CONF[
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    ] = _INIT_PARTITIONS
+# iterative loops — q197 3x worse). Both are read per get_spark() call.
 
 
 def get_spark(
@@ -74,6 +69,9 @@ def get_spark(
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(ENGINE_CONF)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    init_partitions = os.environ.get("SPARK_GRAFT_INIT_PARTITIONS")
+    if init_partitions:
+        conf["spark.sql.adaptive.coalescePartitions.initialPartitionNum"] = init_partitions
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -412,6 +412,12 @@ def render_gantt_png(
         t_min = min(r[first_start] for r in rows)
         t_max = max(r[last_end] for r in rows) or (t_min + 1)
         span = max(t_max - t_min, 1)
+
+        def px(t: int) -> int:
+            # a segment may start before the axis (a reduce whose shuffle
+            # finished before the last map did): clamp into the row
+            return min(max(int((t - t_min) / span * (width - 1)), 0), width - 1)
+
         n = len(rows)
         for i, r in enumerate(rows):
             y0 = i * height // n
@@ -419,8 +425,8 @@ def render_gantt_png(
             for s, e, rgb in segs:
                 if r[s] is None or r[e] is None:
                     continue
-                x0 = int((r[s] - t_min) / span * (width - 1))
-                x1 = max(x0 + 1, int((r[e] - t_min) / span * (width - 1)))
+                x0 = px(r[s])
+                x1 = max(x0 + 1, px(r[e]))
                 for y in range(y0, min(y1, height)):
                     for x in range(x0, min(x1 + 1, width)):
                         pixels[y][x] = rgb

@@ -120,6 +120,18 @@ def parse_records(records: DataFrame, unescape: bool = False) -> DataFrame:
     )
 
 
+def error_class(error: Column) -> Column:
+    """Exception class of an ERROR attribute: the first
+    ``...Exception``/``...Error`` token of the raw (backslash-escaped)
+    value, unescaped for display; NULL when there is none."""
+    klass = F.regexp_replace(
+        F.regexp_extract(error, r"([\w$]+(?:\\\.[\w$]+)*(?:Exception|Error))", 1),
+        r"\\\.",
+        ".",
+    )
+    return F.when(klass != "", klass)
+
+
 def _jobid_of_taskid(taskid: Column) -> Column:
     # task_201010291643_0125_m_000513 -> job_201010291643_0125
     return F.concat(F.lit("job_"), F.regexp_extract(taskid, r"^task_(\d+_\d+)_", 1))

@@ -36,6 +36,7 @@ from pyspark.sql.types import (
 
 from hadoop_jobanalyzer_spark.sources.job_history import (
     _split_records,
+    error_class,
     parse_records,
 )
 
@@ -328,13 +329,6 @@ def error_counts_stream(parsed: DataFrame) -> DataFrame:
     incremental aggregation; emit with ``update``/``complete``.
     """
     a = F.col("attrs")
-    klass = F.regexp_replace(
-        F.regexp_extract(
-            F.col("error"), r"([\w$]+(?:\\\.[\w$]+)*(?:Exception|Error))", 1
-        ),
-        r"\\\.",
-        ".",
-    )
     failed = (
         parsed.filter(F.col("event").isin("MapAttempt", "ReduceAttempt"))
         .select(
@@ -352,7 +346,7 @@ def error_counts_stream(parsed: DataFrame) -> DataFrame:
             "source_file",
             "task_type",
             "task_status",
-            F.when(klass != "", klass).alias("error_class"),
+            error_class(F.col("error")).alias("error_class"),
         )
         .groupBy("source_file", "task_type", "task_status", "error_class")
         .agg(F.count("*").alias("n_attempts"))

@@ -76,9 +76,9 @@ def test_copurchase_edges_bucketed_roundtrip_and_census(spark, tmp_path, no_broa
     from hadoop_jobanalyzer_spark.plans.sketch_queries import (
         _copurchase_edges,
         copurchase_edges_from_table,
-        release_copurchase_edges,
         write_copurchase_edges_bucketed,
     )
+    from hadoop_jobanalyzer_spark.plans.tables import release_session_caches
 
     sf = "/root/testdata/sf0.001"
     write_copurchase_edges_bucketed(
@@ -88,7 +88,7 @@ def test_copurchase_edges_bucketed_roundtrip_and_census(spark, tmp_path, no_broa
         tbl = copurchase_edges_from_table(spark, "t_copurch_b")
 
         # content == the session cache's edge set
-        release_copurchase_edges(spark)
+        release_session_caches(spark)
         want = sorted(map(tuple, _copurchase_edges(spark, sf).collect()))
         got = sorted(map(tuple, tbl.collect()))
         assert got == want and len(got) > 0
@@ -110,7 +110,7 @@ def test_copurchase_edges_bucketed_roundtrip_and_census(spark, tmp_path, no_broa
         want_row = triangle_stats(_copurchase_edges(spark, sf)).collect()[0]
         got_row = triangle_stats(tbl, canonical=True).collect()[0]
         assert got_row == want_row
-        release_copurchase_edges(spark)
+        release_session_caches(spark)
     finally:
         spark.sql("DROP TABLE IF EXISTS t_copurch_b")
 
@@ -139,13 +139,13 @@ def test_cobucketed_corpus_layout_label_join(spark, tmp_path, no_broadcast):
     and the stored labels equal the session cache's CC labels exactly."""
     from hadoop_jobanalyzer_spark.plans.pipeline_queries import (
         corpus_dedup,
-        release_corpus_dedup,
         write_dedup_clusters_bucketed,
         write_documents_bucketed,
     )
+    from hadoop_jobanalyzer_spark.plans.tables import release_session_caches
 
     sf = "/root/testdata/sf0.001"
-    release_corpus_dedup(spark)
+    release_session_caches(spark)
     write_dedup_clusters_bucketed(
         spark, sf, name="t_clusters_b", n_buckets=4, path=str(tmp_path / "cl")
     )
@@ -173,7 +173,7 @@ def test_cobucketed_corpus_layout_label_join(spark, tmp_path, no_broadcast):
         # (different key — expected), but the scan side arrives pruned
         keepers = labels.groupBy("component").agg(F.min("doc_id").alias("keeper"))
         assert keepers.count() == len({c for _, c in got})
-        release_corpus_dedup(spark)
+        release_session_caches(spark)
     finally:
         spark.sql("DROP TABLE IF EXISTS t_clusters_b")
         spark.sql("DROP TABLE IF EXISTS t_docs_b")

@@ -20,14 +20,47 @@ def test_query_analyzes(spark, sf_dir, name):
     assert len(df.schema.fields) > 0, f"{name} produced an empty schema"
 
 
-def test_registry_orders_unverified_first():
-    """The driver records only the first 50 registry entries per round; the
-    ordering must put never-verified / red queries before stale greens so
-    the union of rounds converges and old greens rotate through re-checks."""
+def test_registry_modules_complete_and_disjoint():
+    """Every ``*_queries`` module under plans/ is in the registry's module
+    tuple and contributes at least one query, no query name comes from two
+    modules, and ``queries()`` keeps the registry's own order."""
+    import os
+
     from hadoop_jobanalyzer_spark.plans import registry
 
-    order = list(registry.queries())
-    greens, reds = registry._verification_history()
+    plans_dir = os.path.dirname(registry.__file__)
+    on_disk = {f[:-3] for f in os.listdir(plans_dir) if f.endswith("_queries.py")}
+    modules = [m.__name__.rsplit(".", 1)[1] for m in registry.QUERY_MODULES]
+    assert sorted(modules) == sorted(on_disk)
+    tables = [getattr(m, n.upper()) for m, n in zip(registry.QUERY_MODULES, modules)]
+    assert all(tables), "a query module contributes no query"
+    assert sum(map(len, tables)) == len(QUERIES), "a query name is registered twice"
+    assert list(registry.queries()) == list(QUERIES)
+
+
+def test_registry_rejects_duplicate_names():
+    import types
+
+    from hadoop_jobanalyzer_spark.plans import registry
+
+    a = types.ModuleType("pkg.a_queries")
+    a.A_QUERIES = {"q1": (None, None)}
+    b = types.ModuleType("pkg.b_queries")
+    b.B_QUERIES = {"q1": (None, None)}
+    with pytest.raises(ValueError, match="q1 registered twice"):
+        registry._merge((a, b))
+
+
+def test_registry_orders_unverified_first():
+    """The driver records only the first 50 entries of
+    ``__spark_entry__.queries()`` per round; the ordering must put
+    never-verified / red queries before stale greens so the union of
+    rounds converges and old greens rotate through re-checks."""
+    import __spark_entry__ as entry
+
+    order = list(entry.queries())
+    assert sorted(order) == sorted(QUERIES)
+    greens, reds = entry._verification_history()
 
     def bucket(n):
         return 0 if n in reds else (1 if n not in greens else 2)

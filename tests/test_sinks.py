@@ -468,3 +468,28 @@ def test_render_reduce_gantt_golden_segments(spark, fixture_log1, tmp_path):
         if yx0 > gx0:
             g0, _ = _color_run(lines[i], W, GANTT_SHUFFLE_COLOR)
             assert g0 == gx0, f"rank {i} green start"
+
+
+def test_render_reduce_gantt_shuffle_before_maps_complete(spark, tmp_path):
+    """A reduce whose shuffle finished before the job's last map did: its
+    bars start left of the axis (which starts at the earliest
+    max(start, maps_complete)). It must render without error and paint
+    nothing right of the row's own span, instead of wrapping x around
+    from the right edge (or raising IndexError once x < -width)."""
+    from hadoop_jobanalyzer_spark.sinks import _BG, render_reduce_gantt_png
+
+    W = 100
+    reduces = spark.createDataFrame(
+        [("r1", 1000, 1000, 1200, 1500), ("r2", 0, 1000, 100, 1100)],
+        ["taskid", "start_time", "maps_complete", "shuffle_finish", "end_time"],
+    )
+    out = str(tmp_path / "reduce_gantt.png")
+    render_reduce_gantt_png(reduces, out, width=W, height=2)
+    w, h, data = _png_dims(out)
+    assert (w, h) == (W, 2)
+    r1, r2 = _decode_scanlines(data, W, 2)
+    # axis: t_min 1000 (r1's shuffle start), t_max 1500; r2 ends at 1100
+    r2_right = int((1100 - 1000) / 500 * (W - 1))
+    painted = [x for x in range(W) if tuple(r2[3 * x : 3 * x + 3]) != _BG]
+    assert painted and max(painted) <= r2_right
+    assert tuple(r1[3 * (W - 1) : 3 * W]) != _BG  # r1 reaches the axis end

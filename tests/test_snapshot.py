@@ -22,11 +22,9 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture
 def snapshot(spark, tmp_path):
-    from hadoop_jobanalyzer_spark.plans.pipeline_queries import release_corpus_dedup
-    from hadoop_jobanalyzer_spark.plans.sketch_queries import release_copurchase_edges
+    from hadoop_jobanalyzer_spark.plans.tables import release_session_caches
 
-    release_corpus_dedup(spark)
-    release_copurchase_edges(spark)
+    release_session_caches(spark)
     root = str(tmp_path / "snap")
     manifest = publish_corpus_snapshot(spark, SF_DIR, root, n_buckets=4, prefix="t7")
     yield root, manifest
@@ -212,8 +210,7 @@ def test_versioned_snapshot_lifecycle(spark, tmp_path):
     writers, copy-compaction into a new version, orphan handling, vacuum
     retention. One lifecycle walk because each publish pays the full
     dedup + edge build."""
-    from hadoop_jobanalyzer_spark.plans.pipeline_queries import release_corpus_dedup
-    from hadoop_jobanalyzer_spark.plans.sketch_queries import release_copurchase_edges
+    from hadoop_jobanalyzer_spark.plans.tables import release_session_caches
     from hadoop_jobanalyzer_spark.plans.snapshot import (
         append_batch_to_snapshot,
         compact_snapshot_to_new_version,
@@ -228,8 +225,7 @@ def test_versioned_snapshot_lifecycle(spark, tmp_path):
     )
     from hadoop_jobanalyzer_spark.sources.bucketed import data_file_count
 
-    release_corpus_dedup(spark)
-    release_copurchase_edges(spark)
+    release_session_caches(spark)
     root = str(tmp_path / "vsnap")
     try:
         m1 = publish_snapshot_version(spark, SF_DIR, root, n_buckets=4, prefix="t9")
@@ -444,8 +440,7 @@ def test_full_lakehouse_loop(spark, tmp_path):
     per-layer tests can't: the folded-in ingest docs survive compaction
     into the next version, the diff certifies compaction as
     content-preserving, and the vacuumed store still serves reads."""
-    from hadoop_jobanalyzer_spark.plans.pipeline_queries import release_corpus_dedup
-    from hadoop_jobanalyzer_spark.plans.sketch_queries import release_copurchase_edges
+    from hadoop_jobanalyzer_spark.plans.tables import release_session_caches
     from hadoop_jobanalyzer_spark.plans.snapshot import (
         compact_snapshot_to_new_version,
         publish_snapshot_version,
@@ -459,8 +454,7 @@ def test_full_lakehouse_loop(spark, tmp_path):
         start_corpus_ingest_latest,
     )
 
-    release_corpus_dedup(spark)
-    release_copurchase_edges(spark)
+    release_session_caches(spark)
     root = str(tmp_path / "lh")
     try:
         publish_snapshot_version(spark, SF_DIR, root, n_buckets=4, prefix="lh")

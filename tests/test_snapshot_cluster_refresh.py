@@ -24,11 +24,9 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture
 def snapshot(spark, tmp_path):
-    from hadoop_jobanalyzer_spark.plans.pipeline_queries import release_corpus_dedup
-    from hadoop_jobanalyzer_spark.plans.sketch_queries import release_copurchase_edges
+    from hadoop_jobanalyzer_spark.plans.tables import release_session_caches
 
-    release_corpus_dedup(spark)
-    release_copurchase_edges(spark)
+    release_session_caches(spark)
     root = str(tmp_path / "snap")
     manifest = publish_corpus_snapshot(spark, SF_DIR, root, n_buckets=4, prefix="t11")
     yield root, manifest

@@ -42,13 +42,12 @@ def main() -> int:
 
     import bench
 
-    spark = bench.build_session()
+    spark = bench.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     from pyspark.sql import functions as F
 
-    from hadoop_jobanalyzer_spark.plans.pipeline_queries import release_corpus_dedup
-    from hadoop_jobanalyzer_spark.plans.sketch_queries import release_copurchase_edges
+    from hadoop_jobanalyzer_spark.plans.tables import release_session_caches
     from hadoop_jobanalyzer_spark.plans.snapshot import (
         append_batch_to_snapshot,
         incremental_dedup_candidates,
@@ -58,8 +57,7 @@ def main() -> int:
 
     for i, sf_dir in enumerate(args.sf_dirs.split(",")):
         prefix = f"crp{i}"
-        release_corpus_dedup(spark)
-        release_copurchase_edges(spark)
+        release_session_caches(spark)
         root = os.path.join(tempfile.mkdtemp(prefix="hja_crprobe_"), "snap")
         t0 = time.perf_counter()
         publish_corpus_snapshot(

@@ -57,11 +57,9 @@ def main() -> int:
         sf0.1 graph family (r10)."""
         import gc
 
-        from hadoop_jobanalyzer_spark.plans.pipeline_queries import release_corpus_dedup
-        from hadoop_jobanalyzer_spark.plans.sketch_queries import release_copurchase_edges
+        from hadoop_jobanalyzer_spark.plans.tables import release_session_caches
 
-        release_corpus_dedup(spark)
-        release_copurchase_edges(spark)
+        release_session_caches(spark)
         gc.collect()
         spark.sparkContext._jvm.System.gc()
 

@@ -11,7 +11,11 @@ Stages (each solo — never two Spark sessions at once):
   1. hugeint scan  — plan-only oracle output-type sweep (seconds)
   2. oracle sweep  — all queries vs DuckDB at sf0.01 (~4 min)
   3. pytest        — full suite (~20 min)
-  4. bench         — writes BENCH.json at $SPARK_GRAFT_SF_DIR (sf0.1)
+  4. bench         — runs bench.py at $SPARK_GRAFT_SF_DIR (sf0.1) and
+                     writes BENCH_LAST.json; the committed BENCH.json
+                     anchor is rewritten only with
+                     SPARK_GRAFT_WRITE_BENCH=1, which this gate does
+                     not set
   5. scale slopes  — x10 wall-time slope on the 10 slowest (bound 12x);
                      the regression tripwire for a plan change that goes
                      quadratic. Runs only when the x10 dataset is already

@@ -148,7 +148,7 @@ def main() -> int:
     )
     import bench  # session config identical to the bench harness (heap aside)
 
-    spark = bench.build_session()
+    spark = bench.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     marker = os.path.join(args.out, f"_built_f{args.factor}")
@@ -163,21 +163,19 @@ def main() -> int:
 
     qs = registry.queries()
 
-    def release_session_caches() -> None:
+    def release_caches() -> None:
         """Evict the two persisted session caches (corpus_dedup pairs,
         co-purchase edges) so every (query, dir) measurement starts
         cache-neutral: without this, caches for BOTH dirs accumulate
         across the sweep (eviction pressure skews later slopes) and
         cached-family queries measure whatever an earlier query happened
-        to build — the ordering dependence release_corpus_dedup's
+        to build — the ordering dependence release_session_caches'
         docstring warns about (ADVICE r6). Within one measurement,
         best-of-N still reads warm on runs 2+ — the steady-state regime
         for the cached families, per SCALE.md methodology."""
-        from hadoop_jobanalyzer_spark.plans.pipeline_queries import release_corpus_dedup
-        from hadoop_jobanalyzer_spark.plans.sketch_queries import release_copurchase_edges
+        from hadoop_jobanalyzer_spark.plans.tables import release_session_caches
 
-        release_corpus_dedup(spark)
-        release_copurchase_edges(spark)
+        release_session_caches(spark)
         # Prior measurements' localCheckpoint blocks release only when the
         # ContextCleaner sees their frames GC'd — at x100, letting them
         # linger stacked enough storage pressure to OOM a later query's
@@ -191,7 +189,7 @@ def main() -> int:
         spark.sparkContext._jvm.System.gc()
 
     def best_of(fn, sf_dir: str, name: str = "?", runs: int | None = None) -> float:
-        release_session_caches()
+        release_caches()
         ts = []
         runs = runs if runs is not None else args.runs
         for i in range(max(runs, 1)):

@@ -39,7 +39,7 @@ def main() -> int:
     os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
     import bench
 
-    spark = bench.build_session()
+    spark = bench.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     from hadoop_jobanalyzer_spark.plans.snapshot import (
