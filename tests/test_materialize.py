@@ -158,6 +158,39 @@ def test_materialize_reliable_checkpoint_evaluates_once(spark, tmp_path):
 
 
 @pytest.mark.usefixtures("sf_dir")
+def test_release_corpus_dedup_unpersists(spark):
+    from hadoop_jobanalyzer_spark.plans.pipeline_queries import corpus_dedup
+    from hadoop_jobanalyzer_spark.plans.tables import release_session_caches
+
+    release_session_caches(spark)  # reset whatever earlier tests built
+    spark.catalog.clearCache()
+    pairs, _ = corpus_dedup(spark, SF_DIR)
+    pairs.count()
+    assert not spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert release_session_caches(spark, SF_DIR) == 1
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert release_session_caches(spark, SF_DIR) == 0  # idempotent
+    # rebuild after eviction serves a fresh, correct cache
+    pairs2, _ = corpus_dedup(spark, SF_DIR)
+    assert pairs2.count() == pairs.count()
+
+
+@pytest.mark.usefixtures("sf_dir")
+def test_release_copurchase_edges_unpersists(spark):
+    from hadoop_jobanalyzer_spark.plans.sketch_queries import _copurchase_edges
+    from hadoop_jobanalyzer_spark.plans.tables import release_session_caches
+
+    release_session_caches(spark)
+    spark.catalog.clearCache()
+    e = _copurchase_edges(spark, SF_DIR)
+    n = e.count()
+    assert not spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert release_session_caches(spark) == 1
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert _copurchase_edges(spark, SF_DIR).count() == n
+
+
+@pytest.mark.usefixtures("sf_dir")
 def test_release_session_caches_unpersists(spark):
     """One release call evicts both persisted session caches (the corpus
     dedup pairs and the co-purchase edges), is a no-op when repeated, and
