@@ -13,7 +13,8 @@ Flag semantics follow ``/root/reference/bin/job_history:78-191``:
   never printed);
 * ``-d`` output delimiter (default ", ", multi-char allowed);
 * ``-i`` a path, glob, directory, ``http(s)://`` / ``file://`` URL, or
-  ``-`` for stdin (staged to a temp file — Spark reads files, not pipes);
+  ``-`` for stdin (URLs and stdin are staged to a temp file, removed once
+  the output is written — Spark reads files, not pipes);
 * ``--scale`` one timestamp divisor (default 1000 = seconds, where the
   reference hard-coded 1e6 CLI / 1e3 py / 1e2 CGI);
 * ``--require-success`` skip non-SUCCESS jobs entirely (the reference's
@@ -24,6 +25,7 @@ Flag semantics follow ``/root/reference/bin/job_history:78-191``:
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import tempfile
 
@@ -165,8 +167,6 @@ def main(argv: list[str] | None = None) -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     if args.query or args.sql or args.explain:
-        import os
-
         from hadoop_jobanalyzer_spark.plans.registry import QUERIES
         from hadoop_jobanalyzer_spark.plans.tables import load_tables
 
@@ -207,9 +207,35 @@ def main(argv: list[str] | None = None) -> int:
             print(row["value"])
         return 0
 
-    views = load_history(spark, resolve_input(args.i))
+    # --png renders the chart reports only: -s / --reduce-bytes / --errors /
+    # --wasted / --fleet select summary frames no Gantt/timeline renderer
+    # accepts. Combinations WITHIN the report set (e.g. `-s -m`) never reach
+    # here — the flags share one argparse mutually-exclusive group, so
+    # argparse exits at parse time (asserted by test_cli).
+    if args.png and any((args.s, args.reduce_bytes, args.errors, args.wasted, args.fleet)):
+        print("--png applies to -t, -m, or -r reports only", file=sys.stderr)
+        return 2
+
+    path = resolve_input(args.i)
+    try:
+        return _history_report(spark, args, path)
+    finally:
+        if path != args.i:  # a staged copy of stdin or a URL
+            os.unlink(path)
+
+
+def _history_report(spark, args: argparse.Namespace, path: str) -> int:
+    views = load_history(spark, path)
     if args.require_success:
         views = filter_success(views)
+
+    if args.png:
+        from hadoop_jobanalyzer_spark.webapp import CHARTS
+
+        report, render = CHARTS["map" if args.m else "reduce" if args.r else "timeline"]
+        render(report(views, scale=args.scale), args.png)
+        print(args.png)
+        return 0
 
     if args.s:
         df, cols = job_summary(views, scale=args.scale), SUMMARY_COLS
@@ -227,31 +253,6 @@ def main(argv: list[str] | None = None) -> int:
         df, cols = fleet_summary(views, scale=args.scale), FLEET_COLS
     else:
         df, cols = timeline(views, scale=args.scale), TIMELINE_COLS
-
-    if args.png:
-        from hadoop_jobanalyzer_spark.sinks import (
-            render_map_gantt_png,
-            render_reduce_gantt_png,
-            render_timeline_png,
-        )
-
-        # Reject --png with the non-chart report flags (-s /
-        # --reduce-bytes / --errors / --wasted / --fleet): those select
-        # summary frames no Gantt/timeline renderer accepts. Combinations
-        # WITHIN the report set (e.g. `-s -m`) never reach here — the
-        # flags share one argparse mutually-exclusive group, so argparse
-        # exits at parse time (asserted by test_cli).
-        if any((args.s, args.reduce_bytes, args.errors, args.wasted, args.fleet)):
-            print("--png applies to -t, -m, or -r reports only", file=sys.stderr)
-            return 2
-        if args.m:
-            render_map_gantt_png(df, args.png)
-        elif args.r:
-            render_reduce_gantt_png(df, args.png)
-        else:
-            render_timeline_png(df, args.png)
-        print(args.png)
-        return 0
 
     # toLocalIterator streams partition-by-partition — the driver never
     # holds the whole report (reports can be huge for directory inputs)

@@ -31,6 +31,7 @@ from hadoop_jobanalyzer_spark.sources.job_history import (
     HistoryViews,
     error_class,
     final_attempts,
+    with_final_flag,
 )
 
 _JOB_KEY = ["source_file", "jobid"]
@@ -277,30 +278,18 @@ def wasted_attempts(views: HistoryViews, scale: int = 1000) -> DataFrame:
     (bin/job_history:205,276-281,302-307; SURVEY.md §2.9 "expose as real
     query outputs").
 
-    Wasted = the finish record's status is non-SUCCESS, or it is SUCCESS
-    but a later (in-file order) SUCCESS finish superseded it for the same
-    task (last-success-wins, mirroring ``final_attempts``). SETUP/CLEANUP
+    Wasted = finished and not final per :func:`with_final_flag`: the finish
+    record is non-SUCCESS or carries no status at all, or a later (in-file
+    order) SUCCESS finish superseded it for the same task. SETUP/CLEANUP
     attempts never count (reference early-return, bin/job_history:242-244).
-
-    One window over (source_file, taskid) — no join, no extra shuffle
-    beyond the attempt merge itself.
     """
-    from pyspark.sql.window import Window
-
-    att = views.attempts.filter(
-        F.col("finish_time").isNotNull()
-        & ~F.col("task_type").isin("SETUP", "CLEANUP")
-    )
-    w = Window.partitionBy("source_file", "taskid")
-    final_seq = F.max(
-        F.when(F.col("task_status") == "SUCCESS", F.col("finish_seq"))
-    ).over(w)
-    is_final = (F.col("task_status") == "SUCCESS") & (
-        F.col("finish_seq") == final_seq
-    )
     return (
-        att.withColumn("_final", is_final)
-        .filter(~F.col("_final"))
+        with_final_flag(views.attempts)
+        .filter(
+            F.col("finish_time").isNotNull()
+            & ~F.col("task_type").isin("SETUP", "CLEANUP")
+            & ~F.col("is_final")
+        )
         .select(
             *_JOB_KEY,
             "taskid",

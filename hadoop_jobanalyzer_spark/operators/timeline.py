@@ -18,18 +18,24 @@ All timestamps are bucketed ``floor(ts/scale)`` *before* arithmetic (the
 Python frontend's consistent convention; Groovy's mixed BigDecimal behavior
 differs by at most one bucket and is not golden-tested).
 
-Scale design — two physical strategies for one logical operator:
+Scale design — one dense spine, two ways to fill it:
 
 * ``impl="sweep"`` (default): each interval becomes two delta rows
-  (+1 at t0, -1 at t1+1); deltas are summed per bucket and turned into
-  running concurrency with a cumulative-sum window partitioned by job.
-  Cost: O(attempts) + O(range) rows per job — *independent of task
-  duration*, so a 10-hour task costs the same as a 10-second one. Jobs are
-  the unit of parallelism (the 100 TB case is millions of logs); one job's
-  spine lives in one window partition, bounded by the guard below.
+  (+1 at t0, -1 at t1+1), summed per bucket into a sparse aggregate; after
+  the spine join a cumulative-sum window partitioned by job turns deltas
+  into running concurrency. Cost: O(attempts) + O(range) rows per job —
+  *independent of task duration*, so a 10-hour task costs the same as a
+  10-second one. Jobs are the unit of parallelism (the 100 TB case is
+  millions of logs); one job's spine lives in one window partition,
+  bounded by the guard below.
 * ``impl="explode"``: the literal ``explode(sequence(t0, t1))`` histogram —
-  O(sum of interval lengths) rows. Kept as an independently-derived
-  cross-check (property tests assert both agree) and for tiny inputs.
+  O(sum of interval lengths) rows, already counts per bucket. Kept as an
+  independently-derived cross-check (property tests assert both agree)
+  and for tiny inputs.
+
+Either aggregate is sparse (buckets nothing touches are absent);
+:func:`timeline` builds the dense ``0..range`` spine once and left-joins
+the aggregate onto it once.
 
 Guard (BASELINE.md "timeline scale guard"): a per-job coarsening factor
 ``k = ceil((range+1)/max_buckets)`` widens buckets so the spine never
@@ -42,14 +48,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from hadoop_jobanalyzer_spark.sources.job_history import HistoryViews, final_attempts
+from hadoop_jobanalyzer_spark.operators.history_reports import _JOB_KEY, _abs
+from hadoop_jobanalyzer_spark.sources.job_history import HistoryViews, with_final_flag
 
-_KEY = ["source_file", "jobid"]
 SERIES = ["maps", "shuffle", "merge", "reduce", "waste"]
-
-
-def _scaled(ts: Column, scale: int) -> Column:
-    return F.floor(ts / F.lit(scale))
 
 
 def timeline_intervals(views: HistoryViews, scale: int = 1000) -> DataFrame:
@@ -60,30 +62,27 @@ def timeline_intervals(views: HistoryViews, scale: int = 1000) -> DataFrame:
     attempts contribute three phases (bin/job_history:509-526).
     """
     bounds = views.jobs.select(
-        *_KEY,
-        _scaled(F.col("submit_time"), scale).alias("_submit"),
-        _scaled(F.col("finish_time"), scale).alias("_finish"),
+        *_JOB_KEY,
+        _abs(F.col("submit_time"), scale).alias("_submit"),
+        _abs(F.col("finish_time"), scale).alias("_finish"),
     )
 
-    finals = final_attempts(views.attempts).select(
-        *_KEY, "attempt_id", F.lit(True).alias("_is_final")
-    )
-
+    # the final flag is computed over every attempt, before the start-time
+    # filter below could hide a task's last SUCCESS
     att = (
-        views.attempts.filter(
+        with_final_flag(views.attempts)
+        .filter(
             ~F.col("task_type").isin("SETUP", "CLEANUP")
             & F.col("start_time").isNotNull()
             & F.col("finish_time").isNotNull()
         )
-        .join(finals, [*_KEY, "attempt_id"], "left")
-        .withColumn("_is_final", F.coalesce(F.col("_is_final"), F.lit(False)))
-        .join(F.broadcast(bounds), _KEY)
+        .join(F.broadcast(bounds), _JOB_KEY)
     )
 
-    start_s = _scaled(F.col("start_time"), scale)
-    end_s = _scaled(F.col("finish_time"), scale)
-    sh_s = _scaled(F.col("shuffle_finished"), scale)
-    sort_s = _scaled(F.col("sort_finished"), scale)
+    start_s = _abs(F.col("start_time"), scale)
+    end_s = _abs(F.col("finish_time"), scale)
+    sh_s = _abs(F.col("shuffle_finished"), scale)
+    sort_s = _abs(F.col("sort_finished"), scale)
     submit, finish = F.col("_submit"), F.col("_finish")
 
     def iv(series: str, lo: Column, hi: Column) -> Column:
@@ -95,17 +94,18 @@ def timeline_intervals(views: HistoryViews, scale: int = 1000) -> DataFrame:
 
     is_map = F.col("kind") == "MapAttempt"
     is_red = F.col("kind") == "ReduceAttempt"
+    final = F.col("is_final")
     phases = F.array(
-        F.when(is_map & F.col("_is_final"), iv("maps", start_s, end_s)),
-        F.when(is_map & ~F.col("_is_final"), iv("waste", start_s, end_s)),
-        F.when(is_red & F.col("_is_final"), iv("shuffle", start_s, sh_s)),
-        F.when(is_red & F.col("_is_final"), iv("merge", sh_s, sort_s)),
-        F.when(is_red & F.col("_is_final"), iv("reduce", sort_s, end_s)),
-        F.when(is_red & ~F.col("_is_final"), iv("waste", start_s, end_s)),
+        F.when(is_map & final, iv("maps", start_s, end_s)),
+        F.when(is_map & ~final, iv("waste", start_s, end_s)),
+        F.when(is_red & final, iv("shuffle", start_s, sh_s)),
+        F.when(is_red & final, iv("merge", sh_s, sort_s)),
+        F.when(is_red & final, iv("reduce", sort_s, end_s)),
+        F.when(is_red & ~final, iv("waste", start_s, end_s)),
     )
 
     exploded = att.select(
-        *_KEY,
+        *_JOB_KEY,
         "attempt_id",
         (finish - submit).alias("range"),
         F.explode(phases).alias("_iv"),
@@ -113,7 +113,7 @@ def timeline_intervals(views: HistoryViews, scale: int = 1000) -> DataFrame:
 
     return (
         exploded.select(
-            *_KEY,
+            *_JOB_KEY,
             "attempt_id",
             "range",
             F.col("_iv.series").alias("series"),
@@ -149,9 +149,9 @@ def _dense_spine(intervals: DataFrame) -> DataFrame:
     """One row per (job, t) for t in 0..range — the zeroed dense arrays of
     bin/job_history:476-482."""
     return (
-        intervals.groupBy(*_KEY)
+        intervals.groupBy(*_JOB_KEY)
         .agg(F.max("range").alias("range"))
-        .select(*_KEY, F.explode(F.sequence(F.lit(0), F.col("range"))).alias("t"))
+        .select(*_JOB_KEY, F.explode(F.sequence(F.lit(0), F.col("range"))).alias("t"))
     )
 
 
@@ -164,30 +164,35 @@ def timeline(
     """The timeline report: (source_file, jobid, t, maps, shuffle, merge,
     reduce, waste), dense over t = 0..range, ordered by t."""
     intervals = _coarsen(timeline_intervals(views, scale), max_buckets)
+    dense = [F.coalesce(F.col(s), F.lit(0)) for s in SERIES]
     if impl == "sweep":
         counts = _sweep_counts(intervals)
+        # running concurrency = cumulative sum of the per-bucket deltas
+        w = Window.partitionBy(*_JOB_KEY).orderBy("t").rowsBetween(
+            Window.unboundedPreceding, 0
+        )
+        dense = [F.sum(c).over(w) for c in dense]
     elif impl == "explode":
         counts = _explode_counts(intervals)
     else:
         raise ValueError(f"unknown timeline impl: {impl!r}")
-
-    spine = _dense_spine(intervals)
-    filled = [F.coalesce(F.col(s), F.lit(0)).cast("long").alias(s) for s in SERIES]
     return (
-        spine.join(counts, [*_KEY, "t"], "left")
-        .select(*_KEY, "t", *filled)
-        .orderBy(*_KEY, "t")
+        _dense_spine(intervals)
+        .join(counts, [*_JOB_KEY, "t"], "left")
+        .select(*_JOB_KEY, "t", *[c.cast("long").alias(s) for c, s in zip(dense, SERIES)])
+        .orderBy(*_JOB_KEY, "t")
     )
 
 
 def _sweep_counts(intervals: DataFrame) -> DataFrame:
-    """Interval overlap counting via boundary deltas + running sum.
+    """Sparse per-bucket boundary deltas: +1 at t0, -1 at t1+1.
 
-    O(attempts) delta rows; the cumulative window is partitioned by job (each
-    job's spine is guard-bounded), so scale-out is across jobs.
+    O(attempts) delta rows; :func:`timeline` turns them into running
+    concurrency with a window partitioned by job (each job's spine is
+    guard-bounded), so scale-out is across jobs.
     """
     deltas = intervals.select(
-        *_KEY,
+        *_JOB_KEY,
         "series",
         F.explode(
             F.array(
@@ -195,18 +200,8 @@ def _sweep_counts(intervals: DataFrame) -> DataFrame:
                 F.struct((F.col("t1") + 1).alias("t"), F.lit(-1).alias("d")),
             )
         ).alias("_e"),
-    ).select(*_KEY, "series", F.col("_e.t").alias("t"), F.col("_e.d").alias("d"))
-
-    by_bucket = deltas.groupBy(*_KEY, "t").agg(*_series_sums(F.col("d")))
-
-    w = Window.partitionBy(*_KEY).orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
-    spine = _dense_spine(intervals)
-    joined = spine.join(by_bucket, [*_KEY, "t"], "left")
-    return joined.select(
-        *_KEY,
-        "t",
-        *[F.sum(F.coalesce(F.col(s), F.lit(0))).over(w).alias(s) for s in SERIES],
-    )
+    ).select(*_JOB_KEY, "series", F.col("_e.t").alias("t"), F.col("_e.d").alias("d"))
+    return deltas.groupBy(*_JOB_KEY, "t").agg(*_series_sums(F.col("d")))
 
 
 def _explode_counts(intervals: DataFrame) -> DataFrame:
@@ -214,6 +209,6 @@ def _explode_counts(intervals: DataFrame) -> DataFrame:
     (bin/job_history:486-527) as explode(sequence)+groupBy. Cross-check impl;
     cost grows with total interval length."""
     buckets = intervals.select(
-        *_KEY, "series", F.explode(F.sequence(F.col("t0"), F.col("t1"))).alias("t")
+        *_JOB_KEY, "series", F.explode(F.sequence(F.col("t0"), F.col("t1"))).alias("t")
     )
-    return buckets.groupBy(*_KEY, "t").agg(*_series_sums(F.lit(1)))
+    return buckets.groupBy(*_JOB_KEY, "t").agg(*_series_sums(F.lit(1)))

@@ -279,26 +279,30 @@ def attempts_view(parsed: DataFrame) -> DataFrame:
     return out
 
 
-def final_attempts(attempts: DataFrame) -> DataFrame:
-    """Per task, the *last* (by in-file record order) SUCCESS attempt — the
-    reference's ``finalAttempt`` map (bin/job_history:276-279,302-305).
-
-    Window dedup (SURVEY.md J2/W1): partition by task, order by the
-    FINISH_TIME record's sequence descending, keep row 1. SETUP/CLEANUP
-    attempts are excluded (reference parse-time filter,
-    bin/job_history:242-244).
+def with_final_flag(attempts: DataFrame) -> DataFrame:
+    """Add boolean ``is_final``: the attempt is its task's *last* (by in-file
+    record order) eligible finish — the reference's ``finalAttempt`` map
+    (bin/job_history:276-279,302-305); every other finished attempt is
+    wasted. Eligible = SUCCESS with a FINISH_TIME, not SETUP/CLEANUP
+    (bin/job_history:242-244). Never NULL: a status-less attempt is False.
     """
-    w = Window.partitionBy("source_file", "taskid").orderBy(F.desc("finish_seq"))
-    return (
-        attempts.filter(
-            (F.col("task_status") == "SUCCESS")
-            & F.col("finish_time").isNotNull()
-            & ~F.col("task_type").isin("SETUP", "CLEANUP")
-        )
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
+    eligible = (
+        (F.col("task_status") == "SUCCESS")
+        & F.col("finish_time").isNotNull()
+        & ~F.col("task_type").isin("SETUP", "CLEANUP")
     )
+    final_seq = F.max(F.when(eligible, F.col("finish_seq"))).over(
+        Window.partitionBy("source_file", "taskid")
+    )
+    is_final = F.coalesce(eligible & (F.col("finish_seq") == final_seq), F.lit(False))
+    return attempts.withColumn("is_final", is_final)
+
+
+def final_attempts(attempts: DataFrame) -> DataFrame:
+    """Per task, the attempt :func:`with_final_flag` marks final: at most one
+    row per task, none for a task that never succeeded. Same columns as
+    ``attempts``."""
+    return with_final_flag(attempts).filter(F.col("is_final")).drop("is_final")
 
 
 @dataclass

@@ -37,6 +37,7 @@ from pyspark.sql.types import (
 from hadoop_jobanalyzer_spark.sources.job_history import (
     _split_records,
     error_class,
+    jobs_view,
     parse_records,
 )
 
@@ -153,27 +154,23 @@ def attempt_sessions(
 
 def job_status_stream(parsed: DataFrame) -> DataFrame:
     """Rolling last-write-wins job merge (reference A1) as a streaming
-    aggregation: per job, the latest-by-sequence value of each attribute.
+    aggregation: the batch ``jobs_view`` merge, projected to the job's
+    identity, status, times and task totals.
     Emit with ``outputMode("update")`` / ``"complete"``.
     """
-    a = F.col("attrs")
-    jobs = parsed.filter(F.col("event") == "Job").withColumn("jobid", a["JOBID"])
-
-    def last_of(key: str, typ: str | None = None):
-        col = F.max_by(a[key], F.when(a[key].isNotNull(), F.col("seq")))
-        return (col.cast(typ) if typ else col).alias(key.lower())
-
-    return jobs.groupBy("source_file", "jobid").agg(
-        last_of("JOBNAME"),
-        last_of("USER"),
-        last_of("JOB_STATUS"),
-        last_of("SUBMIT_TIME", "long"),
-        last_of("LAUNCH_TIME", "long"),
-        last_of("FINISH_TIME", "long"),
-        last_of("TOTAL_MAPS", "long"),
-        last_of("TOTAL_REDUCES", "long"),
-        last_of("FINISHED_MAPS", "long"),
-        last_of("FINISHED_REDUCES", "long"),
+    return jobs_view(parsed).select(
+        "source_file",
+        "jobid",
+        "jobname",
+        "user",
+        "job_status",
+        "submit_time",
+        "launch_time",
+        "finish_time",
+        "total_maps",
+        "total_reduces",
+        "finished_maps",
+        "finished_reduces",
     )
 
 

@@ -52,6 +52,22 @@ from http.server import BaseHTTPRequestHandler, HTTPServer
 
 from pyspark.sql import SparkSession
 
+from hadoop_jobanalyzer_spark.operators import map_table, reduce_table, timeline
+from hadoop_jobanalyzer_spark.sinks import (
+    render_map_gantt_png,
+    render_reduce_gantt_png,
+    render_timeline_png,
+)
+from hadoop_jobanalyzer_spark.sources import load_history, stage_url
+
+# chart name -> (report operator, PNG renderer); the webapp's ``chart=``
+# values and the CLI's --png with -t / -m / -r
+CHARTS = {
+    "timeline": (timeline, render_timeline_png),
+    "map": (map_table, render_map_gantt_png),
+    "reduce": (reduce_table, render_reduce_gantt_png),
+}
+
 CHART_DEFAULT_WIDTH = 1200  # ChartUtilities.writeChartAsPNG(..., 1200, 800)
 CHART_DEFAULT_HEIGHT = 800
 CGI_SCALE = 100  # job_history.cgi:107
@@ -79,14 +95,8 @@ def render_chart_png(
     disallowed url scheme, out-of-range dimensions, multi-job input) —
     the HTTP layer maps that to 400.
     """
-    from hadoop_jobanalyzer_spark.operators import map_table, reduce_table, timeline
-    from hadoop_jobanalyzer_spark.sinks import (
-        render_map_gantt_png,
-        render_reduce_gantt_png,
-        render_timeline_png,
-    )
-    from hadoop_jobanalyzer_spark.sources import load_history, stage_url
-
+    if chart not in CHARTS:
+        raise ValueError(f"unknown chart: {chart!r} ({'|'.join(CHARTS)})")
     if not (1 <= width <= _MAX_DIM and 1 <= height <= _MAX_DIM):
         raise ValueError(
             f"width/height must be in 1..{_MAX_DIM}, got {width}x{height}"
@@ -103,39 +113,28 @@ def render_chart_png(
         # render like the log= temp file (a leak otherwise: one staged
         # copy per request).
         path = stage_url(url)
-        cleanup = path
     elif log:
         fd, path = tempfile.mkstemp(suffix=".txt", prefix="job_history_post_")
         with os.fdopen(fd, "w") as f:
             f.write(log)
-        cleanup = path
     else:
         raise ValueError("missing parameter: url= or log= (job_history.cgi:96-101)")
 
     out_fd, out_path = tempfile.mkstemp(suffix=".png", prefix="job_history_chart_")
     os.close(out_fd)
     try:
-        views = load_history(spark, path)
-        if chart == "timeline":
-            render_timeline_png(
-                timeline(views, scale=scale), out_path, width=width, height=height
-            )
-        elif chart == "map":
-            render_map_gantt_png(
-                map_table(views, scale=scale), out_path, width=width, height=height
-            )
-        elif chart == "reduce":
-            render_reduce_gantt_png(
-                reduce_table(views, scale=scale), out_path, width=width, height=height
-            )
-        else:
-            raise ValueError(f"unknown chart: {chart!r} (timeline|map|reduce)")
+        report, render = CHARTS[chart]
+        render(
+            report(load_history(spark, path), scale=scale),
+            out_path,
+            width=width,
+            height=height,
+        )
         with open(out_path, "rb") as f:
             return f.read()
     finally:
         os.unlink(out_path)
-        if cleanup:
-            os.unlink(cleanup)
+        os.unlink(path)
 
 
 def _parse_multipart(body: bytes, content_type: str) -> dict[str, str]:

@@ -1,5 +1,7 @@
 """CLI parity with the reference's bin/job_history flags."""
 
+import os
+
 import pytest
 
 from hadoop_jobanalyzer_spark.__main__ import build_parser, main
@@ -146,3 +148,40 @@ def test_cli_png_modes(capsys, tmp_path, fixture_log1, spark):
     with pytest.raises(SystemExit) as ei:
         main(["-s", "-m", "-i", fixture_log1, "--png", str(tmp_path / "sm.png")])
     assert ei.value.code == 2
+
+
+TINY = os.path.join(os.path.dirname(__file__), "data", "tiny_log.txt")
+
+
+@pytest.mark.parametrize("mode,chart", [("-t", "timeline"), ("-m", "map"), ("-r", "reduce")])
+def test_cli_png_matches_webapp_chart(capsys, tmp_path, spark, mode, chart):
+    """The CLI's --png and the webapp render one chart table: same log,
+    same scale, same bytes."""
+    from hadoop_jobanalyzer_spark.webapp import render_chart_png
+
+    out = tmp_path / f"{chart}.png"
+    assert main([mode, "-i", TINY, "--png", str(out)]) == 0
+    capsys.readouterr()
+    with open(TINY) as f:
+        log = f.read()
+    want = render_chart_png(spark, log=log, chart=chart, scale=1000)
+    assert out.read_bytes() == want
+
+
+def test_cli_unlinks_staged_input(capsys, tmp_path, monkeypatch, spark):
+    """stdin (-i -) and URL inputs are staged to temp files; neither copy
+    outlives the run."""
+    import io
+    import tempfile
+    from pathlib import Path
+
+    with open(TINY) as f:
+        log = f.read()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr("sys.stdin", io.StringIO(log))
+    assert main(["-s", "-i", "-"]) == 0
+    assert main(["-s", "-i", Path(TINY).as_uri()]) == 0
+    out = capsys.readouterr().out.strip().splitlines()
+    assert len(out) == 2 and out[0] == out[1]
+    assert out[0].startswith("job_202001010000_0001, tiny\\.job, alice, SUCCESS")
+    assert list(tmp_path.glob("job_history_*")) == []

@@ -16,6 +16,8 @@ from hadoop_jobanalyzer_spark.operators import (
 from hadoop_jobanalyzer_spark.sources import load_history
 
 TINY = os.path.join(os.path.dirname(__file__), "data", "tiny_log.txt")
+# TINY plus one MAP task whose only attempt finishes with no TASK_STATUS
+NO_STATUS = os.path.join(os.path.dirname(__file__), "data", "no_status_log.txt")
 GRAP = "/root/reference/vis/grap"
 
 
@@ -197,17 +199,40 @@ def _reference_wasted(path):
     return wasted
 
 
-@pytest.mark.parametrize("fixture", ["fixture_log1", "fixture_log2", "tiny"])
+@pytest.mark.parametrize(
+    "fixture", ["fixture_log1", "fixture_log2", "tiny", "no_status"]
+)
 def test_wasted_attempts_matches_reference_fold(spark, request, fixture):
     from hadoop_jobanalyzer_spark.operators import wasted_attempts
 
-    path = TINY if fixture == "tiny" else request.getfixturevalue(fixture)
+    local = {"tiny": TINY, "no_status": NO_STATUS}
+    path = local[fixture] if fixture in local else request.getfixturevalue(fixture)
     views = load_history(spark, path)
     got = {r["attempt_id"] for r in wasted_attempts(views).collect()}
     want = _reference_wasted(path)
     assert got == want
     if fixture == "tiny":  # spot golden: m_000001's failed first attempt
         assert got == {"attempt_202001010000_0001_m_000001_0"}
+    if fixture == "no_status":  # a status-less finish is waste too
+        assert got == {
+            "attempt_202001010000_0001_m_000001_0",
+            "attempt_202001010000_0001_m_000005_0",
+        }
+
+
+def test_wasted_attempts_match_timeline_waste(spark):
+    """The report and the timeline's waste series classify the same
+    attempts — both read the one final-attempt flag."""
+    from hadoop_jobanalyzer_spark.operators import wasted_attempts
+    from hadoop_jobanalyzer_spark.operators.timeline import timeline_intervals
+
+    views = load_history(spark, NO_STATUS)
+    report = {r["attempt_id"] for r in wasted_attempts(views).collect()}
+    drawn = {
+        r["attempt_id"]
+        for r in timeline_intervals(views).filter("series = 'waste'").collect()
+    }
+    assert drawn == report and len(report) == 2
 
 
 def test_wasted_summary_golden_log1(spark, fixture_log1):

@@ -150,6 +150,23 @@ def _n_exchanges(plan: str) -> int:
     return len(re.findall(r"^\(\d+\) Exchange", plan, re.M))
 
 
+def test_timeline_plan_shape(spark):
+    """Canary for the timeline's shape: one final-attempt window shared by
+    the intervals, one dense spine and one spine join. The log is scanned
+    once per use of the intervals (deltas, spine); a second spine or a join
+    back to the final attempts shows up as extra scans and shuffles."""
+    import os
+    import re
+
+    from hadoop_jobanalyzer_spark.sources import load_history
+
+    tiny = os.path.join(os.path.dirname(__file__), "data", "tiny_log.txt")
+    plan = _plan(timeline(load_history(spark, tiny)))
+    n_scans = len(re.findall(r"^\(\d+\) Scan text", plan, re.M))
+    assert n_scans <= 4, f"{n_scans} text scans\n{plan}"
+    assert _n_exchanges(plan) <= 9, f"{_n_exchanges(plan)} exchanges\n{plan}"
+
+
 @pytest.mark.parametrize(
     "name,max_exchanges",
     [

@@ -1,6 +1,7 @@
 """Streaming ingest + stateful operators, differentially checked against the
 batch engine on the real fixture logs."""
 
+import os
 import shutil
 import uuid
 
@@ -15,6 +16,8 @@ from hadoop_jobanalyzer_spark.streaming import (
     read_history_stream,
 )
 
+DATA = os.path.join(os.path.dirname(__file__), "data")
+
 
 @pytest.fixture()
 def log_dir(tmp_path, fixture_log1, fixture_log2):
@@ -22,6 +25,17 @@ def log_dir(tmp_path, fixture_log1, fixture_log2):
     d.mkdir()
     shutil.copy(fixture_log1, d / "job1.txt")
     shutil.copy(fixture_log2, d / "job2.txt")
+    return str(d)
+
+
+@pytest.fixture()
+def local_log_dir(tmp_path):
+    """The two in-repo logs (one SUCCESS job, one FAILED job) as an
+    arriving-logs directory — runs where the reference logs are absent."""
+    d = tmp_path / "incoming_local"
+    d.mkdir()
+    for name in ("tiny_log.txt", "failed_log.txt"):
+        shutil.copy(os.path.join(DATA, name), d / name)
     return str(d)
 
 
@@ -48,7 +62,7 @@ def test_stream_records_match_batch(spark, log_dir):
     assert got == want and got["Job"] > 0
 
 
-def test_job_status_stream_matches_batch_jobs(spark, log_dir):
+def _job_status_stream_vs_batch(spark, log_dir):
     name = f"jobs_{uuid.uuid4().hex[:8]}"
     parsed = read_history_stream(spark, log_dir)
     _run_to_memory(job_status_stream(parsed), name, "complete")
@@ -62,6 +76,19 @@ def test_job_status_stream_matches_batch_jobs(spark, log_dir):
         for r in batch.collect()
     }
     assert got == want and len(got) == 2
+    return got
+
+
+def test_job_status_stream_matches_batch_jobs(spark, log_dir):
+    _job_status_stream_vs_batch(spark, log_dir)
+
+
+def test_job_status_stream_matches_batch_jobs_local(spark, local_log_dir):
+    got = _job_status_stream_vs_batch(spark, local_log_dir)
+    assert got == {
+        "job_202001010000_0001": ("SUCCESS", 12000000, 2),
+        "job_202001010000_0002": ("FAILED", 6000000, 0),
+    }
 
 
 def test_latest_success_attempts_match_batch_finals(spark, log_dir):
@@ -160,7 +187,7 @@ def test_attempt_sessions_stream_matches_batch(spark, log_dir):
     assert got == want and len(got) > 0
 
 
-def test_wasted_counts_stream_matches_batch(spark, log_dir):
+def _wasted_counts_stream_vs_batch(spark, log_dir):
     """Streaming wasted counts == batch wasted_attempts rolled up per task."""
     from hadoop_jobanalyzer_spark.operators import wasted_attempts
     from hadoop_jobanalyzer_spark.streaming.history_stream import wasted_counts_stream
@@ -177,7 +204,21 @@ def test_wasted_counts_stream_matches_batch(spark, log_dir):
         r["taskid"]: r["n"]
         for r in batch.groupBy("taskid").agg(F.count("*").alias("n")).collect()
     }
-    assert got == want and len(got) > 100  # kmerStats alone wastes 139
+    assert got == want
+    return got
+
+
+def test_wasted_counts_stream_matches_batch(spark, log_dir):
+    got = _wasted_counts_stream_vs_batch(spark, log_dir)
+    assert len(got) > 100  # kmerStats alone wastes 139
+
+
+def test_wasted_counts_stream_matches_batch_local(spark, local_log_dir):
+    got = _wasted_counts_stream_vs_batch(spark, local_log_dir)
+    assert got == {
+        "task_202001010000_0001_m_000001": 1,
+        "task_202001010000_0002_m_000000": 1,
+    }
 
 
 def test_error_counts_stream_matches_batch(spark, log_dir):

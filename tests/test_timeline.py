@@ -70,6 +70,17 @@ def test_sweep_matches_explode_fixture(spark, fixture_log1):
     assert diff.count() == 0
 
 
+def test_sweep_matches_explode_local_logs(spark):
+    """Both strategies agree on every in-repo log at once (several jobs,
+    a failed job, a status-less attempt), at two scales."""
+    v = load_history(spark, os.path.dirname(TINY))
+    for scale in (100, 1000):
+        sweep = timeline(v, scale=scale, impl="sweep")
+        explode = timeline(v, scale=scale, impl="explode")
+        assert sweep.collect() == explode.collect()
+        assert sweep.select("source_file").distinct().count() == 3
+
+
 def test_timeline_invariant_sums(spark, fixture_log1):
     """Sum over t of each series == total interval length (end-inclusive) —
     FIXTURES.md §4 invariant."""
