@@ -233,7 +233,8 @@ def _history_report(spark, args: argparse.Namespace, path: str) -> int:
         from hadoop_jobanalyzer_spark.webapp import CHARTS
 
         report, render = CHARTS["map" if args.m else "reduce" if args.r else "timeline"]
-        render(report(views, scale=args.scale), args.png)
+        with open(args.png, "wb") as f:
+            f.write(render(report(views, scale=args.scale)))
         print(args.png)
         return 0
 

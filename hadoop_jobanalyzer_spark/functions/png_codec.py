@@ -1,12 +1,12 @@
-"""Dependency-free PNG codec — the vendored decode fallback for the
-multimodal image tier.
+"""Dependency-free PNG codec — the chart rasterizer's encoder and the
+vendored decode fallback for the multimodal image tier.
 
-The engine's rasterizer (sinks.py) already *writes* PNG with nothing but
-stdlib ``zlib``/``struct``; this module is the matching reader, so the
-real-decode multimodal path (``operators/multimodal.decoded_image_features``)
-executes even where no image library is installed. Scope is deliberately
-the still-image subset a data pipeline actually meets in practice and the
-rasterizer emits:
+``encode_png`` writes the charts that sinks.py paints (numpy canvas in,
+filter-0 PNG out, stdlib ``zlib``/``struct``); ``decode_png`` is the
+matching reader, so the real-decode multimodal path
+(``operators/multimodal.decoded_image_features``) executes even where no
+image library is installed. Scope is deliberately the still-image subset
+a data pipeline actually meets in practice and the rasterizer emits:
 
 * 8-bit samples, non-interlaced, all five scanline filters (None / Sub /
   Up / Average / Paeth, RFC 2083 §6);
@@ -168,8 +168,8 @@ def decode_png(payload: bytes) -> np.ndarray:
 
 def encode_png(arr: np.ndarray) -> bytes:
     """Encode a uint8 array — ``(h, w)`` gray, ``(h, w, 2)`` gray+alpha,
-    ``(h, w, 3)`` RGB, or ``(h, w, 4)`` RGBA — as a filter-0 PNG (the
-    same minimal emitter shape as the rasterizer's sinks._png_bytes)."""
+    ``(h, w, 3)`` RGB, or ``(h, w, 4)`` RGBA — as a filter-0 PNG at zlib
+    level 6 (the chart rasterizer's output format, sinks.py)."""
     a = np.ascontiguousarray(np.asarray(arr, dtype=np.uint8))
     if a.ndim == 2:
         ctype, channels = 0, 1
@@ -179,7 +179,9 @@ def encode_png(arr: np.ndarray) -> bytes:
     else:
         raise ValueError(f"unsupported array shape {a.shape}")
     h, w = a.shape[0], a.shape[1]
-    raw = b"".join(b"\x00" + a[y].tobytes() for y in range(h))
+    # a filter-0 byte column prepended to the rows: the scanline stream
+    rows = a.reshape(h, w * channels)
+    raw = np.concatenate([np.zeros((h, 1), np.uint8), rows], axis=1).tobytes()
 
     def chunk(tag: bytes, data: bytes) -> bytes:
         return (

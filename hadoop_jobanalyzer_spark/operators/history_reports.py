@@ -31,6 +31,7 @@ from hadoop_jobanalyzer_spark.sources.job_history import (
     HistoryViews,
     error_class,
     final_attempts,
+    not_setup_cleanup,
     with_final_flag,
 )
 
@@ -287,7 +288,7 @@ def wasted_attempts(views: HistoryViews, scale: int = 1000) -> DataFrame:
         with_final_flag(views.attempts)
         .filter(
             F.col("finish_time").isNotNull()
-            & ~F.col("task_type").isin("SETUP", "CLEANUP")
+            & not_setup_cleanup()
             & ~F.col("is_final")
         )
         .select(

@@ -49,7 +49,11 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from hadoop_jobanalyzer_spark.operators.history_reports import _JOB_KEY, _abs
-from hadoop_jobanalyzer_spark.sources.job_history import HistoryViews, with_final_flag
+from hadoop_jobanalyzer_spark.sources.job_history import (
+    HistoryViews,
+    not_setup_cleanup,
+    with_final_flag,
+)
 
 SERIES = ["maps", "shuffle", "merge", "reduce", "waste"]
 
@@ -72,7 +76,7 @@ def timeline_intervals(views: HistoryViews, scale: int = 1000) -> DataFrame:
     att = (
         with_final_flag(views.attempts)
         .filter(
-            ~F.col("task_type").isin("SETUP", "CLEANUP")
+            not_setup_cleanup()
             & F.col("start_time").isNotNull()
             & F.col("finish_time").isNotNull()
         )

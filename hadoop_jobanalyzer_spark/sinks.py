@@ -13,19 +13,27 @@ Spark-first shapes of the reference's three output paths
   collected rows, with the reference's counter-flatten bug fixed
   (SURVEY.md §2.9: inner regex ran over the whole COUNTERS value).
 * S7 stacked-bar timeline PNG (``job_history.cgi:344-390``, JFreeChart
-  1200x800, Map=blue Shuffle=green Sort=red Reduce=yellow Waste=black):
-  a dependency-free rasterizer (stdlib zlib) over the *bucketed* timeline —
-  the collect is O(duration/bucket), never O(rows).
+  1200x800, Map=blue Shuffle=green Sort=red Reduce=yellow Waste=black)
+  and the per-task Gantt PNGs (``vis/grap/*.gr``): each chart is painted
+  into one numpy ``(height, width, 3)`` uint8 canvas by slice assignment
+  (a rectangle per Gantt bar segment, a column slice per timeline
+  series) and encoded by ``functions.png_codec.encode_png``. The timeline
+  collect is O(duration/bucket), never O(rows). ``timeline_png``,
+  ``gantt_png``, ``map_gantt_png`` and ``reduce_gantt_png`` return the
+  PNG bytes (the webapp answers them directly); each ``render_*_png``
+  writes the same bytes to a path and returns the path.
 """
 
 from __future__ import annotations
 
-import struct
-import zlib
 from collections.abc import Mapping
+from pathlib import Path
 from typing import Any
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
+
+from hadoop_jobanalyzer_spark.functions.png_codec import encode_png
 from hadoop_jobanalyzer_spark.util import materialize_eager
 
 DEFAULT_DELIMITER = ", "  # reference default (bin/job_history:172-175)
@@ -304,7 +312,7 @@ def print_nice(row: Any) -> None:
     print(format_nice(row))
 
 
-# --- S7: stacked-bar timeline PNG -------------------------------------------
+# --- S7: stacked-bar timeline and Gantt PNGs ---------------------------------
 
 # The reference's fixed legend colors (job_history.cgi:358-380).
 TIMELINE_COLORS: dict[str, tuple[int, int, int]] = {
@@ -317,23 +325,8 @@ TIMELINE_COLORS: dict[str, tuple[int, int, int]] = {
 _BG = (255, 255, 255)
 
 
-def _png_bytes(width: int, height: int, rows: list[bytes]) -> bytes:
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + tag
-            + data
-            + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, 0)  # 8-bit RGB
-    raw = b"".join(b"\x00" + r for r in rows)  # filter 0 per scanline
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw, 6))
-        + chunk(b"IEND", b"")
-    )
+def _canvas(width: int, height: int) -> np.ndarray:
+    return np.full((height, width, 3), _BG, dtype=np.uint8)
 
 
 def _job_key_cols(df: DataFrame) -> list[str]:
@@ -353,9 +346,8 @@ def _assert_single_job_rows(rows, keys: list[str], what: str) -> None:
         )
 
 
-def render_gantt_png(
+def gantt_png(
     table_df: DataFrame,
-    out_path: str,
     start_col: str = "start_time",
     end_col: str = "end_time",
     width: int = 1200,
@@ -363,8 +355,8 @@ def render_gantt_png(
     color: tuple[int, int, int] = (0, 0, 255),
     max_rows: int = 4096,
     segments: list[tuple[str, str, tuple[int, int, int]]] | None = None,
-) -> str:
-    """Task Gantt chart over a ``-m``/``-r`` style table — the
+) -> bytes:
+    """Task Gantt chart PNG over a ``-m``/``-r`` style table — the
     ``vis/grap/mapgraph.gr`` / ``reducegraph.gr`` plots
     (vis/grap/mapgraph.gr:5-10, vis/grap/reducegraph.gr:12-42) without
     the grap/pic toolchain.
@@ -375,7 +367,8 @@ def render_gantt_png(
     ``segments`` draws multi-phase bars: a list of
     ``(start_col, end_col, rgb)`` painted in order — the reduce chart's
     green shuffle segment then yellow reduce segment. Default is the
-    single ``(start_col, end_col, color)`` map-style bar.
+    single ``(start_col, end_col, color)`` map-style bar. Each segment is
+    one rectangle slice of the canvas.
 
     The collect is capped at ``max_rows`` tasks so the chart never pulls
     an unbounded table into the driver.
@@ -407,7 +400,7 @@ def render_gantt_png(
                 "render_gantt_png renders a single job but the input has "
                 f"multiple ({keys}) keys — filter to one job first"
             )
-    pixels = [[_BG] * width for _ in range(height)]
+    img = _canvas(width, height)
     if rows:
         t_min = min(r[first_start] for r in rows)
         t_max = max(r[last_end] for r in rows) or (t_min + 1)
@@ -427,13 +420,8 @@ def render_gantt_png(
                     continue
                 x0 = px(r[s])
                 x1 = max(x0 + 1, px(r[e]))
-                for y in range(y0, min(y1, height)):
-                    for x in range(x0, min(x1 + 1, width)):
-                        pixels[y][x] = rgb
-    scanlines = [b"".join(bytes(p) for p in line) for line in pixels]
-    with open(out_path, "wb") as f:
-        f.write(_png_bytes(width, height, scanlines))
-    return out_path
+                img[y0:y1, x0 : x1 + 1] = rgb
+    return encode_png(img)
 
 
 # reducegraph.gr's phase colors: green = shuffle (start -> shuffle
@@ -445,15 +433,13 @@ GANTT_SHUFFLE_COLOR = (0x22, 0xFF, 0x22)
 GANTT_REDUCE_COLOR = (0xFF, 0xFF, 0x22)
 
 
-def render_map_gantt_png(map_df: DataFrame, out_path: str, **kw) -> str:
+def map_gantt_png(map_df: DataFrame, **kw) -> bytes:
     """``vis/grap/mapgraph.gr``: one red start->end bar per map task over
     the ``-m`` table (map.d columns 2-3)."""
-    return render_gantt_png(
-        map_df, out_path, "start_time", "end_time", color=GANTT_MAP_COLOR, **kw
-    )
+    return gantt_png(map_df, "start_time", "end_time", color=GANTT_MAP_COLOR, **kw)
 
 
-def render_reduce_gantt_png(reduce_df: DataFrame, out_path: str, **kw) -> str:
+def reduce_gantt_png(reduce_df: DataFrame, **kw) -> bytes:
     """``vis/grap/reducegraph.gr:38-46``: per reduce task, a green bar
     from ``max(start, maps_complete)`` to the shuffle finish, then a
     yellow bar to the task end — over the ``-r`` table's 7 columns.
@@ -464,9 +450,8 @@ def render_reduce_gantt_png(reduce_df: DataFrame, out_path: str, **kw) -> str:
     clamped = reduce_df.withColumn(
         "_sh_start", F.greatest("start_time", "maps_complete")
     )
-    return render_gantt_png(
+    return gantt_png(
         clamped,
-        out_path,
         segments=[
             ("_sh_start", "shuffle_finish", GANTT_SHUFFLE_COLOR),
             ("shuffle_finish", "end_time", GANTT_REDUCE_COLOR),
@@ -475,13 +460,12 @@ def render_reduce_gantt_png(reduce_df: DataFrame, out_path: str, **kw) -> str:
     )
 
 
-def render_timeline_png(
+def timeline_png(
     timeline_df: DataFrame,
-    out_path: str,
     width: int = 1200,
     height: int = 800,
     series: tuple[str, ...] = ("maps", "shuffle", "merge", "reduce", "waste"),
-) -> str:
+) -> bytes:
     """Rasterize a (t, maps, shuffle, merge, reduce, waste) timeline as a
     stacked-bar PNG — the webapp's chart (job_history.cgi:344-390) without
     the JFreeChart dependency.
@@ -489,42 +473,54 @@ def render_timeline_png(
     Collects the *bucketed* timeline (O(duration/bucket) rows by
     construction — the timeline operator guards spine size), averages
     buckets into pixel columns, and stacks the series bottom-up in the
-    reference's colors.
+    reference's colors, one column slice per series.
     """
     keys = _job_key_cols(timeline_df)
     rows = timeline_df.select(*keys, "t", *series).orderBy("t").collect()
     _assert_single_job_rows(rows, keys, "render_timeline_png")
-    if not rows:
-        data = [bytes(_BG) * width for _ in range(height)]
-        png = _png_bytes(width, height, data)
-        with open(out_path, "wb") as f:
-            f.write(png)
-        return out_path
+    img = _canvas(width, height)
+    if rows:
+        n = len(rows)
+        values = [[v or 0 for v in r[len(keys) + 1 :]] for r in rows]
+        # average the series over the buckets that map to each pixel column
+        cols: list[list[float]] = []
+        for x in range(width):
+            lo = x * n // width
+            hi = max(lo + 1, (x + 1) * n // width)
+            bucket = values[lo:hi]
+            cols.append([sum(v) / len(bucket) for v in zip(*bucket)])
+        peak = max((sum(c) for c in cols), default=1.0) or 1.0
+        palette = [TIMELINE_COLORS.get(s, (128, 128, 128)) for s in series]
+        for x, col in enumerate(cols):
+            y = height  # bottom
+            for val, color in zip(col, palette):
+                h = round(val / peak * height)
+                # y drops below 0 once the rounded stack overshoots the
+                # top; a negative slice end would count from the bottom
+                img[max(0, y - h) : max(0, y), x] = color
+                y -= h
+    return encode_png(img)
 
-    n = len(rows)
-    # average the series over the buckets that map to each pixel column
-    cols: list[list[float]] = []
-    for x in range(width):
-        lo = x * n // width
-        hi = max(lo + 1, (x + 1) * n // width)
-        bucket = rows[lo:hi]
-        cols.append(
-            [sum(r[s] or 0 for r in bucket) / len(bucket) for s in series]
-        )
-    peak = max((sum(c) for c in cols), default=1.0) or 1.0
 
-    # paint column-major into row-major scanlines, bottom-up stacking
-    pixels = [[_BG] * width for _ in range(height)]
-    palette = [TIMELINE_COLORS.get(s, (128, 128, 128)) for s in series]
-    for x, col in enumerate(cols):
-        y = height  # bottom
-        for val, color in zip(col, palette):
-            h = round(val / peak * height)
-            for yy in range(max(0, y - h), y):
-                pixels[yy][x] = color
-            y -= h
-    scanlines = [b"".join(bytes(p) for p in line) for line in pixels]
-    png = _png_bytes(width, height, scanlines)
-    with open(out_path, "wb") as f:
-        f.write(png)
+def render_gantt_png(table_df: DataFrame, out_path: str, *args, **kw) -> str:
+    """:func:`gantt_png` written to ``out_path``; returns the path."""
+    Path(out_path).write_bytes(gantt_png(table_df, *args, **kw))
+    return out_path
+
+
+def render_map_gantt_png(map_df: DataFrame, out_path: str, **kw) -> str:
+    """:func:`map_gantt_png` written to ``out_path``; returns the path."""
+    Path(out_path).write_bytes(map_gantt_png(map_df, **kw))
+    return out_path
+
+
+def render_reduce_gantt_png(reduce_df: DataFrame, out_path: str, **kw) -> str:
+    """:func:`reduce_gantt_png` written to ``out_path``; returns the path."""
+    Path(out_path).write_bytes(reduce_gantt_png(reduce_df, **kw))
+    return out_path
+
+
+def render_timeline_png(timeline_df: DataFrame, out_path: str, *args, **kw) -> str:
+    """:func:`timeline_png` written to ``out_path``; returns the path."""
+    Path(out_path).write_bytes(timeline_png(timeline_df, *args, **kw))
     return out_path

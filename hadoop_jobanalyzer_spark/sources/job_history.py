@@ -279,6 +279,12 @@ def attempts_view(parsed: DataFrame) -> DataFrame:
     return out
 
 
+def not_setup_cleanup() -> Column:
+    """True for MAP/REDUCE attempts: the reference skips SETUP/CLEANUP tasks
+    in every per-task rule (early return, bin/job_history:242-244)."""
+    return ~F.col("task_type").isin("SETUP", "CLEANUP")
+
+
 def with_final_flag(attempts: DataFrame) -> DataFrame:
     """Add boolean ``is_final``: the attempt is its task's *last* (by in-file
     record order) eligible finish — the reference's ``finalAttempt`` map
@@ -289,7 +295,7 @@ def with_final_flag(attempts: DataFrame) -> DataFrame:
     eligible = (
         (F.col("task_status") == "SUCCESS")
         & F.col("finish_time").isNotNull()
-        & ~F.col("task_type").isin("SETUP", "CLEANUP")
+        & not_setup_cleanup()
     )
     final_seq = F.max(F.when(eligible, F.col("finish_seq"))).over(
         Window.partitionBy("source_file", "taskid")

@@ -38,8 +38,22 @@ from hadoop_jobanalyzer_spark.sources.job_history import (
     _split_records,
     error_class,
     jobs_view,
+    not_setup_cleanup,
     parse_records,
 )
+
+__all__ = [
+    "read_history_stream",
+    "attempt_finish_counts",
+    "attempt_sessions",
+    "job_status_stream",
+    "latest_success_attempts",
+    "dedup_attempts_stream",
+    "LATEST_ATTEMPT_OUTPUT_SCHEMA",
+    "wasted_counts_stream",
+    "error_counts_stream",
+    "enrich_attempts_stream",
+]
 
 
 def read_history_stream(
@@ -199,7 +213,7 @@ def latest_success_attempts(parsed: DataFrame) -> DataFrame:
     events = _attempt_events(parsed).filter(
         (F.col("task_status") == "SUCCESS")
         & F.col("finish_time").isNotNull()
-        & ~F.col("task_type").isin("SETUP", "CLEANUP")
+        & not_setup_cleanup()
     )
 
     def keep_latest(
@@ -278,16 +292,6 @@ def _opt_long(v: Any) -> int | None:
     return None if pd.isna(v) else int(v)
 
 
-__all__ = [
-    "read_history_stream",
-    "attempt_finish_counts",
-    "dedup_attempts_stream",
-    "job_status_stream",
-    "latest_success_attempts",
-    "LATEST_ATTEMPT_OUTPUT_SCHEMA",
-]
-
-
 def wasted_counts_stream(parsed: DataFrame) -> DataFrame:
     """Streaming form of the wasted-attempt rollup (reference
     ``wastedAttempts``, bin/job_history:205,276-281): per task, finished
@@ -298,7 +302,7 @@ def wasted_counts_stream(parsed: DataFrame) -> DataFrame:
     """
     ev = _attempt_events(parsed).filter(
         F.col("finish_time").isNotNull()
-        & ~F.col("task_type").isin("SETUP", "CLEANUP")
+        & not_setup_cleanup()
     )
     return (
         ev.groupBy("source_file", "taskid")

@@ -10,8 +10,8 @@ concurrency chart (job_history.cgi:344-390).
 This module serves the same interface from the stdlib ``http.server``
 over the Spark engine: the request's log goes through
 ``sources.load_history`` and ``operators.timeline`` and the response is
-the dependency-free ``sinks.render_timeline_png`` raster. Extensions
-beyond the CGI (documented, all optional):
+the PNG bytes ``sinks.timeline_png`` paints in memory (no output file).
+Extensions beyond the CGI (documented, all optional):
 
 * ``chart=timeline|map|reduce`` — ``map``/``reduce`` answer the per-task
   Gantt charts (``vis/grap/mapgraph.gr`` / ``reducegraph.gr``), which the
@@ -53,19 +53,15 @@ from http.server import BaseHTTPRequestHandler, HTTPServer
 from pyspark.sql import SparkSession
 
 from hadoop_jobanalyzer_spark.operators import map_table, reduce_table, timeline
-from hadoop_jobanalyzer_spark.sinks import (
-    render_map_gantt_png,
-    render_reduce_gantt_png,
-    render_timeline_png,
-)
+from hadoop_jobanalyzer_spark.sinks import map_gantt_png, reduce_gantt_png, timeline_png
 from hadoop_jobanalyzer_spark.sources import load_history, stage_url
 
-# chart name -> (report operator, PNG renderer); the webapp's ``chart=``
-# values and the CLI's --png with -t / -m / -r
+# chart name -> (report operator, PNG-bytes renderer); the webapp's
+# ``chart=`` values and the CLI's --png with -t / -m / -r
 CHARTS = {
-    "timeline": (timeline, render_timeline_png),
-    "map": (map_table, render_map_gantt_png),
-    "reduce": (reduce_table, render_reduce_gantt_png),
+    "timeline": (timeline, timeline_png),
+    "map": (map_table, map_gantt_png),
+    "reduce": (reduce_table, reduce_gantt_png),
 }
 
 CHART_DEFAULT_WIDTH = 1200  # ChartUtilities.writeChartAsPNG(..., 1200, 800)
@@ -73,7 +69,7 @@ CHART_DEFAULT_HEIGHT = 800
 CGI_SCALE = 100  # job_history.cgi:107
 
 _MAX_BODY = 256 * 1024 * 1024  # a job-history log, not a corpus
-_MAX_DIM = 8192  # raster buffers are O(w*h) driver-side lists
+_MAX_DIM = 8192  # the raster canvas is O(w*h) bytes in the driver
 DEFAULT_URL_SCHEMES = ("http", "https")
 
 
@@ -120,20 +116,12 @@ def render_chart_png(
     else:
         raise ValueError("missing parameter: url= or log= (job_history.cgi:96-101)")
 
-    out_fd, out_path = tempfile.mkstemp(suffix=".png", prefix="job_history_chart_")
-    os.close(out_fd)
     try:
         report, render = CHARTS[chart]
-        render(
-            report(load_history(spark, path), scale=scale),
-            out_path,
-            width=width,
-            height=height,
+        return render(
+            report(load_history(spark, path), scale=scale), width=width, height=height
         )
-        with open(out_path, "rb") as f:
-            return f.read()
     finally:
-        os.unlink(out_path)
         os.unlink(path)
 
 

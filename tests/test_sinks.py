@@ -4,6 +4,7 @@ import glob
 import struct
 import zlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from hadoop_jobanalyzer_spark.operators import map_table, timeline
@@ -493,3 +494,65 @@ def test_render_reduce_gantt_shuffle_before_maps_complete(spark, tmp_path):
     painted = [x for x in range(W) if tuple(r2[3 * x : 3 * x + 3]) != _BG]
     assert painted and max(painted) <= r2_right
     assert tuple(r1[3 * (W - 1) : 3 * W]) != _BG  # r1 reaches the axis end
+
+
+def test_timeline_png_stack_overshoot_paints_nothing_above_top(spark):
+    """Rounded series heights can stack past the top (here 4 x round(0.75)
+    = 4 rows on a 3-row canvas): the running ``y`` goes negative, and the
+    overshooting series must paint nothing — a negative slice end would
+    wrap around and paint most of the column. Bytes pinned to the
+    per-pixel rasterizer this replaced."""
+    import hashlib
+
+    from hadoop_jobanalyzer_spark.functions.png_codec import decode_png
+    from hadoop_jobanalyzer_spark.sinks import timeline_png
+
+    tl = spark.createDataFrame(
+        [(0, 1, 1, 1, 1, 0)],
+        "t long, maps long, shuffle long, merge long, reduce long, waste long",
+    )
+    png = timeline_png(tl, width=1, height=3)
+    assert hashlib.sha256(png).hexdigest() == (
+        "0b04661e48a262c4faeb822fc53de88f8e9d27673d542f4fd4325576e0b3c447"
+    )
+    c = TIMELINE_COLORS
+    assert decode_png(png).tolist() == [[list(c["merge"])], [list(c["shuffle"])], [list(c["maps"])]]
+
+
+# SHA-256 of ``webapp.render_chart_png(spark, log=<file text>, chart=...,
+# width=..., height=...)`` (default scale 100) for the local logs, recorded
+# with the per-pixel list rasterizer the numpy canvas replaced, so any
+# change to the chart bytes shows here without the reference fixture logs.
+CHART_GOLDENS = {
+    ("tiny_log.txt", "timeline", 1200, 800): "56bde14338d2ad28030bf1d9d4da13a1849ee09f7d8b3adb1e2549f991c59acc",
+    ("tiny_log.txt", "timeline", 40, 30): "e92dadce41e0f5b98cc5d3a95d97c8eed8386a3ed5b22624c3c39662d445a3f8",
+    ("tiny_log.txt", "map", 1200, 800): "e8ab8c9466aca35e53b167e82d31d3944dda7003c382a9854ceb04c29994ced6",
+    ("tiny_log.txt", "map", 40, 30): "a54cfedaa045fa2dbd0fa3d01085d35b9a645610023aeee251c2c1e57f8d4560",
+    ("tiny_log.txt", "reduce", 1200, 800): "41a1bf3304e2c6859f60be416ef868ca67bedadbe6524aaebed83492afb9d1b0",
+    ("tiny_log.txt", "reduce", 40, 30): "d950fddae530175a583352fac233e4f53c14b597a595982a95dba94f85b301d4",
+    ("failed_log.txt", "timeline", 1200, 800): "810e72906624b0b3a93b87acf30b6710f7068934b53643b5ed0f406f63e6bf66",
+    ("failed_log.txt", "timeline", 40, 30): "6f1b4cc8daeea61322f55e8432008407941feab6431298cd6b719bf32f42e7cc",
+    ("failed_log.txt", "map", 1200, 800): "5bcfde9d196dfce8395858c0c93cb0dd78fd5a45d959e129c71de54e28b74e5d",
+    ("failed_log.txt", "map", 40, 30): "a6b989c3154f0fe5ff646e4c470fea6fe5360af9747dfaddef6e6c599f76ee3c",
+    ("failed_log.txt", "reduce", 1200, 800): "fd5c209d49c9ab00d8b9b7f00e89b069c8e9c6d453aff5b4b8d123743702b390",
+    ("failed_log.txt", "reduce", 40, 30): "942f5459e433bdca376e0a7e6dba1a931f8005103373d26ac8c1c6a6244ff523",
+    ("no_status_log.txt", "timeline", 1200, 800): "be8cdfe8a1e482176edaa8af528c977b68327ce7ec951ea3e8e944ea6b9cf3d2",
+    ("no_status_log.txt", "timeline", 40, 30): "53e25cd9a9d55b3ce4378c2125ed6e2e3776a14fbb94fa00e2772d8f263aff94",
+    ("no_status_log.txt", "map", 1200, 800): "e8ab8c9466aca35e53b167e82d31d3944dda7003c382a9854ceb04c29994ced6",
+    ("no_status_log.txt", "map", 40, 30): "a54cfedaa045fa2dbd0fa3d01085d35b9a645610023aeee251c2c1e57f8d4560",
+    ("no_status_log.txt", "reduce", 1200, 800): "41a1bf3304e2c6859f60be416ef868ca67bedadbe6524aaebed83492afb9d1b0",
+    ("no_status_log.txt", "reduce", 40, 30): "d950fddae530175a583352fac233e4f53c14b597a595982a95dba94f85b301d4",
+}
+
+
+@pytest.mark.parametrize(("log", "chart", "width", "height"), sorted(CHART_GOLDENS))
+def test_chart_png_matches_golden(spark, log, chart, width, height):
+    import hashlib
+    import os
+
+    from hadoop_jobanalyzer_spark.webapp import render_chart_png
+
+    with open(os.path.join(os.path.dirname(__file__), "data", log)) as f:
+        text = f.read()
+    png = render_chart_png(spark, log=text, chart=chart, width=width, height=height)
+    assert hashlib.sha256(png).hexdigest() == CHART_GOLDENS[log, chart, width, height]

@@ -256,3 +256,17 @@ def test_enrich_attempts_stream_static_join(spark, log_dir):
     assert out.count() == n_events
     users = {r["user"] for r in out.select("user").distinct().collect()}
     assert users == {"kbhatia", "hadoop"}  # every row enriched, none null
+
+
+def test_history_stream_all_lists_every_public_function():
+    import inspect
+
+    from hadoop_jobanalyzer_spark.streaming import history_stream
+
+    public = {
+        name
+        for name, fn in inspect.getmembers(history_stream, inspect.isfunction)
+        if not name.startswith("_") and fn.__module__ == history_stream.__name__
+    }
+    assert public <= set(history_stream.__all__)
+    assert all(hasattr(history_stream, name) for name in history_stream.__all__)

@@ -201,3 +201,27 @@ def test_root_serves_landing_form(server):
         assert resp.headers["Content-Type"].startswith("text/html")
         body = resp.read().decode()
     assert 'action="/job_history"' in body and 'name="url"' in body
+
+
+def test_render_chart_png_stages_only_the_posted_log(spark, tmp_path, monkeypatch):
+    """The chart is answered from memory: per request the only temp file
+    is the staged ``log=`` copy, and it is gone afterwards."""
+    import tempfile
+
+    from hadoop_jobanalyzer_spark.webapp import CHARTS, render_chart_png
+
+    log = (Path(__file__).parent / "data" / "tiny_log.txt").read_text()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    staged = []
+    mkstemp = tempfile.mkstemp
+
+    def spy(*args, **kw):
+        staged.append(kw.get("prefix"))
+        return mkstemp(*args, **kw)
+
+    monkeypatch.setattr(tempfile, "mkstemp", spy)
+    for chart in CHARTS:
+        png = render_chart_png(spark, log=log, chart=chart, width=40, height=30)
+        assert png[:8] == b"\x89PNG\r\n\x1a\n"
+    assert staged == ["job_history_post_"] * len(CHARTS)
+    assert list(tmp_path.iterdir()) == []
