@@ -26,6 +26,7 @@ Spark-first shapes of the reference's three output paths
 
 from __future__ import annotations
 
+from collections import Counter
 from collections.abc import Mapping
 from pathlib import Path
 from typing import Any
@@ -161,20 +162,17 @@ def compact_partitions(
     a second run finds nothing fragmented. Returns the list of partition
     values rewritten (stringified), for the caller's maintenance log.
     """
-    import glob as _glob
-    import os as _os
-
-    frag: list[str] = []
-    for d in sorted(_glob.glob(_os.path.join(path, f"{partition_col}=*"))):
-        n_files = len(
-            [
-                f
-                for f in _os.listdir(d)
-                if f.endswith((".parquet", ".orc")) and not f.startswith(("_", "."))
-            ]
-        )
-        if n_files > max_files_per_partition:
-            frag.append(d.rsplit("=", 1)[1])
+    # the Hadoop FileSystem API lists hdfs://, s3a:// and file: paths alike
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path
+    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    n_files: Counter[str] = Counter()
+    for st in fs.globStatus(hpath(path.rstrip("/") + f"/{partition_col}=*/*")) or []:
+        f = st.getPath()
+        name = f.getName()
+        if name.endswith((".parquet", ".orc")) and not name.startswith(("_", ".")):
+            n_files[f.getParent().getName().split("=", 1)[1]] += 1
+    frag = sorted(v for v, n in n_files.items() if n > max_files_per_partition)
     if not frag:
         return []
     # read only the fragmented partitions, partition-pruned; values arrive

@@ -61,18 +61,22 @@ def stage_url(url: str, staging_dir: str | None = None) -> str:
     only network hop in the system); the parallel read happens on the staged
     copy. ``file://`` URLs work too (used by tests — no network here).
     """
+    import os
+    import shutil
     import tempfile
     import urllib.request
 
     fd, path = tempfile.mkstemp(
         suffix=".txt", prefix="job_history_", dir=staging_dir
     )
-    with urllib.request.urlopen(url) as resp, open(fd, "wb") as out:
-        while True:
-            chunk = resp.read(1 << 20)
-            if not chunk:
-                break
-            out.write(chunk)
+    # open the descriptor first so it is closed whatever fails next; a
+    # failed fetch leaves no staged file behind
+    try:
+        with open(fd, "wb") as out, urllib.request.urlopen(url) as resp:
+            shutil.copyfileobj(resp, out, 1 << 20)
+    except BaseException:
+        os.unlink(path)
+        raise
     return path
 
 
@@ -285,18 +289,25 @@ def not_setup_cleanup() -> Column:
     return ~F.col("task_type").isin("SETUP", "CLEANUP")
 
 
-def with_final_flag(attempts: DataFrame) -> DataFrame:
-    """Add boolean ``is_final``: the attempt is its task's *last* (by in-file
-    record order) eligible finish — the reference's ``finalAttempt`` map
-    (bin/job_history:276-279,302-305); every other finished attempt is
-    wasted. Eligible = SUCCESS with a FINISH_TIME, not SETUP/CLEANUP
-    (bin/job_history:242-244). Never NULL: a status-less attempt is False.
-    """
-    eligible = (
+def final_eligible() -> Column:
+    """True for an attempt that may be its task's final one: SUCCESS with a
+    FINISH_TIME, not SETUP/CLEANUP (bin/job_history:242-244,276-279). Reads
+    ``task_status``/``finish_time``/``task_type``, so it applies to merged
+    attempts and to single attempt records alike."""
+    return (
         (F.col("task_status") == "SUCCESS")
         & F.col("finish_time").isNotNull()
         & not_setup_cleanup()
     )
+
+
+def with_final_flag(attempts: DataFrame) -> DataFrame:
+    """Add boolean ``is_final``: the attempt is its task's *last* (by in-file
+    record order) :func:`final_eligible` finish — the reference's
+    ``finalAttempt`` map (bin/job_history:276-279,302-305); every other
+    finished attempt is wasted. Never NULL: a status-less attempt is False.
+    """
+    eligible = final_eligible()
     final_seq = F.max(F.when(eligible, F.col("finish_seq"))).over(
         Window.partitionBy("source_file", "taskid")
     )

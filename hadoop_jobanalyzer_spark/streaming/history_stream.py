@@ -3,40 +3,34 @@
 The reference is batch-only, but two of its semantics are exactly the
 shapes Structured Streaming formalizes (SURVEY.md §2.7):
 
-* last-SUCCESS-attempt supersedes earlier ones  -> keep-latest state
-  (:func:`latest_success_attempts`, ``applyInPandasWithState``);
+* last-SUCCESS-attempt supersedes earlier ones  -> an update-mode arg-max
+  aggregate (:func:`latest_success_attempts`, ``max_by`` over record order);
 * concurrency-over-time counting               -> watermarked tumbling
   windows (:func:`attempt_finish_counts`).
 
-Ingest reuses the *batch* parse expressions verbatim
-(``sources.job_history.parse_records`` is pure Catalyst column logic, so the
-same code runs in both modes): each arriving file is one job's whole log
-(``wholetext``), split to records and parsed to the same
-(source_file, seq, event, attrs) shape. A directory of job logs therefore
-behaves as an unbounded table of history events — the 100 TB-scale shape is
-"the JobTracker drops finished-job logs into a bucket; the engine keeps
-rolling views current" with per-file parallelism and bounded state
-(watermarks / explicit state timeouts).
+Every operator here is built from the batch definitions in
+``sources.job_history``: the same ``source_file`` key
+(``input_file_name()``), the same record split and parse expressions, the
+``ATTEMPT_FIELDS`` attribute projection, the ``final_eligible()`` rule and
+the taskid→jobid rule. Each arriving file is one job's whole log, split to
+records and parsed to the same (source_file, seq, event, attrs) shape, so
+streamed rows join to the batch and lake views. A directory of job logs
+therefore behaves as an unbounded table of history events — the 100 TB-scale
+shape is "the JobTracker drops finished-job logs into a bucket; the engine
+keeps rolling views current" with per-file parallelism and bounded state
+(watermarks, or one small row per live key).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from hadoop_jobanalyzer_spark.sources.job_history import (
+    ATTEMPT_FIELDS,
+    _jobid_of_taskid,
     _split_records,
     error_class,
+    final_eligible,
     jobs_view,
     not_setup_cleanup,
     parse_records,
@@ -49,7 +43,6 @@ __all__ = [
     "job_status_stream",
     "latest_success_attempts",
     "dedup_attempts_stream",
-    "LATEST_ATTEMPT_OUTPUT_SCHEMA",
     "wasted_counts_stream",
     "error_counts_stream",
     "enrich_attempts_stream",
@@ -67,11 +60,11 @@ def read_history_stream(
 
     One file = one job's complete log, so record reassembly can never
     straddle a micro-batch boundary and ``seq`` (in-file order) is exact —
-    the property the keep-latest semantics below depend on. The
+    the property the final-attempt rule below depends on. The
     ``binaryFile`` source delivers each file whole (the streaming ``text``
     source ignores ``wholetext`` and would drop multi-physical-line records
-    — ERROR stack traces); decode + record split are the same expressions as
-    batch.
+    — ERROR stack traces); ``source_file``, decode and record split are the
+    same expressions as batch.
     """
     reader = spark.readStream.format("binaryFile").schema(
         "path STRING, modificationTime TIMESTAMP, length LONG, content BINARY"
@@ -81,29 +74,51 @@ def read_history_stream(
     raw = reader.load(path)
     records = _split_records(
         raw.select(
-            F.col("path").alias("source_file"),
+            F.input_file_name().alias("source_file"),
             F.decode(F.col("content"), "UTF-8").alias("value"),
         )
     )
     return parse_records(records, unescape=unescape)
 
 
+# the ATTEMPT_FIELDS columns of one streamed attempt record; COUNTERS parsing
+# and the tracker/host columns stay with the merged batch views
+_EVENT_COLUMNS = {
+    "taskid",
+    "task_type",
+    "task_status",
+    "start_time",
+    "finish_time",
+    "shuffle_finished",
+    "sort_finished",
+    "error",
+}
+
+
 def _attempt_events(parsed: DataFrame) -> DataFrame:
-    """Flat per-record attempt projection (no cross-record merge — streaming
-    operators fold records incrementally instead)."""
+    """Flat per-record projection of ``ATTEMPT_FIELDS`` (no cross-record
+    merge — streaming operators fold records incrementally instead)."""
     a = F.col("attrs")
     return parsed.filter(F.col("event").isin("MapAttempt", "ReduceAttempt")).select(
         "source_file",
         "seq",
         F.col("event").alias("kind"),
         a["TASK_ATTEMPT_ID"].alias("attempt_id"),
-        a["TASKID"].alias("taskid"),
-        a["TASK_TYPE"].alias("task_type"),
-        a["TASK_STATUS"].alias("task_status"),
-        a["START_TIME"].cast("long").alias("start_time"),
-        a["FINISH_TIME"].cast("long").alias("finish_time"),
-        a["SHUFFLE_FINISHED"].cast("long").alias("shuffle_finished"),
-        a["SORT_FINISHED"].cast("long").alias("sort_finished"),
+        *[
+            (a[key].cast(typ) if typ else a[key]).alias(name)
+            for key, name, typ in ATTEMPT_FIELDS
+            if name in _EVENT_COLUMNS
+        ],
+    )
+
+
+def _finished_events(parsed: DataFrame) -> DataFrame:
+    """Attempt records that carry a FINISH_TIME, with it as ``finish_ts``
+    (the event-time column the watermarked operators key on)."""
+    return (
+        _attempt_events(parsed)
+        .filter(F.col("finish_time").isNotNull())
+        .withColumn("finish_ts", F.timestamp_millis(F.col("finish_time")))
     )
 
 
@@ -118,13 +133,9 @@ def attempt_finish_counts(
     and window state is evicted, which bounds memory on an unbounded log
     stream.
     """
-    events = (
-        _attempt_events(parsed)
-        .filter(F.col("finish_time").isNotNull())
-        .withColumn("finish_ts", F.timestamp_millis(F.col("finish_time")))
-    )
     return (
-        events.withWatermark("finish_ts", watermark_delay)
+        _finished_events(parsed)
+        .withWatermark("finish_ts", watermark_delay)
         .groupBy(F.window("finish_ts", window_duration).alias("win"), "task_type")
         .agg(F.count("*").alias("n_finished"))
         .select(
@@ -148,13 +159,9 @@ def attempt_sessions(
     expression — Spark ignores the watermark in batch), which is what the
     differential test exploits.
     """
-    events = (
-        _attempt_events(parsed)
-        .filter(F.col("finish_time").isNotNull())
-        .withColumn("finish_ts", F.timestamp_millis(F.col("finish_time")))
-    )
     return (
-        events.withWatermark("finish_ts", watermark_delay)
+        _finished_events(parsed)
+        .withWatermark("finish_ts", watermark_delay)
         .groupBy(F.session_window("finish_ts", gap).alias("win"), "task_type")
         .agg(F.count("*").alias("n_finished"))
         .select(
@@ -188,84 +195,25 @@ def job_status_stream(parsed: DataFrame) -> DataFrame:
     )
 
 
-LATEST_ATTEMPT_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("source_file", StringType()),
-        StructField("taskid", StringType()),
-        StructField("attempt_id", StringType()),
-        StructField("finish_time", LongType()),
-        StructField("shuffle_finished", LongType()),
-        StructField("n_success_attempts", LongType()),
-    ]
-)
-
-
 def latest_success_attempts(parsed: DataFrame) -> DataFrame:
-    """Custom stateful operator: per task, keep the latest (by in-file
-    record order) SUCCESS attempt — the reference's ``finalAttempt`` map
-    (bin/job_history:276-279) as ``applyInPandasWithState`` keep-latest
-    state. State per key is one small tuple, so state-store size is
-    O(live tasks), not O(records).
-
-    Non-SQL-expressible in streaming (arbitrary per-group state machine);
-    the batch engine's window-dedup (J2) is the differential check.
+    """Per task, the latest (by in-file record order) :func:`final_eligible`
+    attempt record — the reference's ``finalAttempt`` map
+    (bin/job_history:276-279), the rule batch ``with_final_flag`` applies.
+    The rule is an arg-max, so it is a plain streaming aggregate: ``max_by``
+    over ``seq`` plus a count, one state row per (source_file, taskid).
+    Columns: source_file, taskid, attempt_id, finish_time, shuffle_finished,
+    n_success_attempts. Emit with ``outputMode("update")`` /
+    ``"complete"``; batch ``final_attempts`` is the differential check.
     """
-    events = _attempt_events(parsed).filter(
-        (F.col("task_status") == "SUCCESS")
-        & F.col("finish_time").isNotNull()
-        & not_setup_cleanup()
+    latest = F.max_by(
+        F.struct("attempt_id", "finish_time", "shuffle_finished"), F.col("seq")
     )
-
-    def keep_latest(
-        key: tuple[str, str],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            finish_seq, attempt_id, finish_time, shuffle_finished, n_seen = state.get
-        else:
-            finish_seq, attempt_id, finish_time, shuffle_finished, n_seen = (
-                -1,
-                None,
-                None,
-                None,
-                0,
-            )
-        for pdf in pdfs:
-            n_seen += len(pdf)
-            best = pdf.loc[pdf["seq"].idxmax()]
-            if int(best["seq"]) > finish_seq:
-                finish_seq = int(best["seq"])
-                attempt_id = best["attempt_id"]
-                finish_time = _opt_long(best["finish_time"])
-                shuffle_finished = _opt_long(best["shuffle_finished"])
-        state.update((finish_seq, attempt_id, finish_time, shuffle_finished, n_seen))
-        yield pd.DataFrame(
-            {
-                "source_file": [key[0]],
-                "taskid": [key[1]],
-                "attempt_id": [attempt_id],
-                "finish_time": [finish_time],
-                "shuffle_finished": [shuffle_finished],
-                "n_success_attempts": [n_seen],
-            }
-        )
-
-    state_schema = StructType(
-        [
-            StructField("finish_seq", LongType()),
-            StructField("attempt_id", StringType()),
-            StructField("finish_time", LongType()),
-            StructField("shuffle_finished", LongType()),
-            StructField("n_success_attempts", LongType()),
-        ]
-    )
-    return events.groupBy("source_file", "taskid").applyInPandasWithState(
-        keep_latest,
-        LATEST_ATTEMPT_OUTPUT_SCHEMA,
-        state_schema,
-        "update",
-        GroupStateTimeout.NoTimeout,
+    return (
+        _attempt_events(parsed)
+        .filter(final_eligible())
+        .groupBy("source_file", "taskid")
+        .agg(latest.alias("_latest"), F.count("*").alias("n_success_attempts"))
+        .select("source_file", "taskid", "_latest.*", "n_success_attempts")
     )
 
 
@@ -278,18 +226,11 @@ def dedup_attempts_stream(
     ``dropDuplicatesWithinWatermark``, the streaming form of the batch
     engine's dropDuplicates/countDistinct family (SURVEY.md O3).
     """
-    events = (
-        _attempt_events(parsed)
-        .filter(F.col("finish_time").isNotNull())
-        .withColumn("finish_ts", F.timestamp_millis(F.col("finish_time")))
+    return (
+        _finished_events(parsed)
+        .withWatermark("finish_ts", watermark_delay)
+        .dropDuplicatesWithinWatermark(["attempt_id", "kind"])
     )
-    return events.withWatermark("finish_ts", watermark_delay).dropDuplicatesWithinWatermark(
-        ["attempt_id", "kind"]
-    )
-
-
-def _opt_long(v: Any) -> int | None:
-    return None if pd.isna(v) else int(v)
 
 
 def wasted_counts_stream(parsed: DataFrame) -> DataFrame:
@@ -300,12 +241,10 @@ def wasted_counts_stream(parsed: DataFrame) -> DataFrame:
     task, no custom state store); emit with ``update``/``complete``.
     SETUP/CLEANUP excluded as in the batch operator.
     """
-    ev = _attempt_events(parsed).filter(
-        F.col("finish_time").isNotNull()
-        & not_setup_cleanup()
-    )
     return (
-        ev.groupBy("source_file", "taskid")
+        _finished_events(parsed)
+        .filter(not_setup_cleanup())
+        .groupBy("source_file", "taskid")
         .agg(
             F.count("*").alias("n_finished"),
             F.count(F.when(F.col("task_status") == "SUCCESS", 1)).alias("n_success"),
@@ -329,27 +268,17 @@ def error_counts_stream(parsed: DataFrame) -> DataFrame:
     batch report's distinct-attempt count (differential-tested). Pure
     incremental aggregation; emit with ``update``/``complete``.
     """
-    a = F.col("attrs")
-    failed = (
-        parsed.filter(F.col("event").isin("MapAttempt", "ReduceAttempt"))
-        .select(
-            "source_file",
-            a["TASK_TYPE"].alias("task_type"),
-            a["TASK_STATUS"].alias("task_status"),
-            a["ERROR"].alias("error"),
-        )
+    return (
+        _attempt_events(parsed)
         .filter(
             F.col("task_status").isin("FAILED", "KILLED") | F.col("error").isNotNull()
         )
-    )
-    return (
-        failed.select(
+        .groupBy(
             "source_file",
             "task_type",
             "task_status",
             error_class(F.col("error")).alias("error_class"),
         )
-        .groupBy("source_file", "task_type", "task_status", "error_class")
         .agg(F.count("*").alias("n_attempts"))
     )
 
@@ -368,10 +297,7 @@ def enrich_attempts_stream(parsed: DataFrame, jobs_static: DataFrame) -> DataFra
         jobs_static.groupBy(F.col("jobid").alias("_jobid"))
         .agg(F.min("user").alias("user"), F.min("jobname").alias("jobname"))
     )
-    ev = _attempt_events(parsed).withColumn(
-        "jobid",
-        F.regexp_replace(F.col("taskid"), r"^task_(\d+_\d+)_.*$", r"job_$1"),
-    )
+    ev = _attempt_events(parsed).withColumn("jobid", _jobid_of_taskid(F.col("taskid")))
     return ev.join(F.broadcast(dims), ev["jobid"] == dims["_jobid"], "left").drop(
         "_jobid"
     )

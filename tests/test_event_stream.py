@@ -32,6 +32,15 @@ def events_dir(tmp_path, sf_dir):
     return str(d)
 
 
+def _space_mtime(shard, i):
+    """Push shard ``i``'s mtime ``i`` seconds ahead. The file source orders
+    arrivals by mtime in milliseconds, and shards written within one
+    millisecond tie and arrive in directory order; tests that need shards
+    to arrive in write order space them out."""
+    mtime = os.stat(shard).st_mtime + i
+    os.utime(shard, (mtime, mtime))
+
+
 def _run_to_memory(df, name, output_mode, checkpoint=None):
     w = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
     if checkpoint:
@@ -551,6 +560,7 @@ def test_view_purchase_left_outer_stream_emits_unconverted(spark, sf_dir, tmp_pa
             coerce_timestamps="us",
             allow_truncated_timestamps=True,
         )
+        _space_mtime(d / f"shard{i}.parquet", i)
     name = f"vplo_{uuid.uuid4().hex[:8]}"
     stream = (
         spark.readStream.schema(spark.read.parquet(str(d)).schema)
@@ -641,6 +651,7 @@ def test_zscore_anomaly_stream_matches_batch_prefix(spark, sf_dir, events_dir, t
             coerce_timestamps="us",
             allow_truncated_timestamps=True,
         )
+        _space_mtime(d / f"shard{i}.parquet", i)
     name = f"zs_{uuid.uuid4().hex[:8]}"
     stream = (
         spark.readStream.schema(spark.read.parquet(str(d)).schema)

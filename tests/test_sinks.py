@@ -97,6 +97,29 @@ def test_stage_url_file_scheme(spark, fixture_log1):
     assert glob.glob(staged)
 
 
+def test_stage_url_failed_fetch_leaves_no_staged_file(tmp_path, monkeypatch):
+    """A failed fetch neither leaves its staging file behind nor keeps its
+    descriptor open (the webapp's url= and the CLI's -i URL go through it)."""
+    import os
+    import tempfile
+
+    fds = []
+    mkstemp = tempfile.mkstemp
+
+    def spy(*args, **kwargs):
+        fd, path = mkstemp(*args, **kwargs)
+        fds.append(fd)
+        return fd, path
+
+    monkeypatch.setattr(tempfile, "mkstemp", spy)
+    with pytest.raises(OSError):
+        stage_url((tmp_path / "missing.txt").as_uri(), staging_dir=str(tmp_path))
+    assert os.listdir(tmp_path) == []
+    assert len(fds) == 1
+    with pytest.raises(OSError):
+        os.fstat(fds[0])
+
+
 def test_render_gantt_png(spark, fixture_log1, tmp_path):
     from hadoop_jobanalyzer_spark.sinks import render_gantt_png
 
@@ -264,6 +287,30 @@ def test_compact_partitions_rewrites_only_fragmented(spark, sf_dir, tmp_path):
     assert after == before
     # idempotent: second run finds nothing fragmented
     assert compact_partitions(spark, path, "etype", max_files_per_partition=1) == []
+
+
+def test_compact_partitions_lists_through_hadoop_fs(spark, tmp_path):
+    """A table addressed by a ``file:`` URI (as hdfs:// or s3a:// tables
+    always are) is listed through the Hadoop FileSystem, so its fragmented
+    partition is found and rewritten to one file."""
+    import os
+
+    from hadoop_jobanalyzer_spark.sinks import compact_partitions
+
+    local = tmp_path / "lake"
+    uri = local.as_uri()
+    for rows in ([(1, "a"), (2, "a")], [(3, "a")]):
+        spark.createDataFrame(rows, "id INT, part STRING").coalesce(1).write.mode(
+            "append"
+        ).partitionBy("part").parquet(uri)
+
+    def n_files():
+        return len([f for f in os.listdir(local / "part=a") if f.endswith(".parquet")])
+
+    assert n_files() == 2
+    assert compact_partitions(spark, uri, "part") == ["a"]
+    assert n_files() == 1
+    assert sorted(r["id"] for r in spark.read.parquet(uri).collect()) == [1, 2, 3]
 
 
 def test_read_evolved_merges_schemas(spark, tmp_path):

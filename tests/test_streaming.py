@@ -39,6 +39,27 @@ def local_log_dir(tmp_path):
     return str(d)
 
 
+# One job whose map and reduce each finish two SUCCESS attempts (speculative
+# execution): the later finish record in the file is the final attempt.
+SPECULATIVE_LOG = r"""Meta VERSION="1" .
+Job JOBID="job_202001010000_0003" JOBNAME="speculative\.job" USER="alice" SUBMIT_TIME="1000000" .
+Job JOBID="job_202001010000_0003" LAUNCH_TIME="2000000" TOTAL_MAPS="1" TOTAL_REDUCES="1" JOB_STATUS="RUNNING" .
+Task TASKID="task_202001010000_0003_m_000000" TASK_TYPE="MAP" START_TIME="3000000" SPLITS="" .
+MapAttempt TASK_TYPE="MAP" TASKID="task_202001010000_0003_m_000000" TASK_ATTEMPT_ID="attempt_202001010000_0003_m_000000_0" START_TIME="3000100" TRACKER_NAME="tracker_h1" HTTP_PORT="50060" .
+MapAttempt TASK_TYPE="MAP" TASKID="task_202001010000_0003_m_000000" TASK_ATTEMPT_ID="attempt_202001010000_0003_m_000000_1" START_TIME="4000100" TRACKER_NAME="tracker_h2" HTTP_PORT="50060" .
+MapAttempt TASK_TYPE="MAP" TASKID="task_202001010000_0003_m_000000" TASK_ATTEMPT_ID="attempt_202001010000_0003_m_000000_1" TASK_STATUS="SUCCESS" FINISH_TIME="5000000" HOSTNAME="h2" .
+MapAttempt TASK_TYPE="MAP" TASKID="task_202001010000_0003_m_000000" TASK_ATTEMPT_ID="attempt_202001010000_0003_m_000000_0" TASK_STATUS="SUCCESS" FINISH_TIME="6000000" HOSTNAME="h1" .
+Task TASKID="task_202001010000_0003_m_000000" TASK_TYPE="MAP" TASK_STATUS="SUCCESS" FINISH_TIME="6000100" .
+Task TASKID="task_202001010000_0003_r_000000" TASK_TYPE="REDUCE" START_TIME="6500000" SPLITS="" .
+ReduceAttempt TASK_TYPE="REDUCE" TASKID="task_202001010000_0003_r_000000" TASK_ATTEMPT_ID="attempt_202001010000_0003_r_000000_0" START_TIME="6500100" TRACKER_NAME="tracker_h1" HTTP_PORT="50060" .
+ReduceAttempt TASK_TYPE="REDUCE" TASKID="task_202001010000_0003_r_000000" TASK_ATTEMPT_ID="attempt_202001010000_0003_r_000000_1" START_TIME="6600100" TRACKER_NAME="tracker_h2" HTTP_PORT="50060" .
+ReduceAttempt TASK_TYPE="REDUCE" TASKID="task_202001010000_0003_r_000000" TASK_ATTEMPT_ID="attempt_202001010000_0003_r_000000_0" TASK_STATUS="SUCCESS" SHUFFLE_FINISHED="7000000" SORT_FINISHED="7500000" FINISH_TIME="8000000" HOSTNAME="h1" .
+ReduceAttempt TASK_TYPE="REDUCE" TASKID="task_202001010000_0003_r_000000" TASK_ATTEMPT_ID="attempt_202001010000_0003_r_000000_1" TASK_STATUS="SUCCESS" SHUFFLE_FINISHED="7200000" SORT_FINISHED="7600000" FINISH_TIME="8500000" HOSTNAME="h2" .
+Task TASKID="task_202001010000_0003_r_000000" TASK_TYPE="REDUCE" TASK_STATUS="SUCCESS" FINISH_TIME="8500100" .
+Job JOBID="job_202001010000_0003" FINISH_TIME="9000000" JOB_STATUS="SUCCESS" FINISHED_MAPS="1" FINISHED_REDUCES="1" FAILED_MAPS="0" FAILED_REDUCES="0" .
+"""
+
+
 def _run_to_memory(df, name: str, output_mode: str):
     q = (
         df.writeStream.format("memory")
@@ -101,6 +122,31 @@ def test_latest_success_attempts_match_batch_finals(spark, log_dir):
     want = {r["taskid"]: r["attempt_id"] for r in finals.collect()}
     assert got == want
     assert len(want) > 800  # 512+320 finished tasks in log1 alone
+
+
+def test_latest_success_attempts_match_batch_finals_local(spark, local_log_dir):
+    """One file per micro-batch, plus a speculative job: the streamed
+    (source_file, taskid) rows equal batch ``final_attempts`` tuple for
+    tuple, source_file included, so the two join."""
+    with open(os.path.join(local_log_dir, "speculative_log.txt"), "w") as f:
+        f.write(SPECULATIVE_LOG)
+    name = f"finals_{uuid.uuid4().hex[:8]}"
+    parsed = read_history_stream(spark, local_log_dir, max_files_per_trigger=1)
+    _run_to_memory(latest_success_attempts(parsed), name, "update")
+    rows = spark.table(name).collect()
+    cols = ["source_file", "taskid", "attempt_id", "finish_time", "shuffle_finished"]
+    got = sorted(tuple(r[c] for c in cols) for r in rows)
+    finals = load_history(spark, local_log_dir).final_attempts().select(*cols)
+    assert got == sorted(tuple(r) for r in finals.collect())
+    speculative = {
+        r["taskid"]: (r["attempt_id"], r["n_success_attempts"])
+        for r in rows
+        if r["source_file"].endswith("speculative_log.txt")
+    }
+    assert speculative == {
+        "task_202001010000_0003_m_000000": ("attempt_202001010000_0003_m_000000_0", 2),
+        "task_202001010000_0003_r_000000": ("attempt_202001010000_0003_r_000000_1", 2),
+    }
 
 
 def test_attempt_finish_counts_windows(spark, log_dir):
@@ -221,7 +267,9 @@ def test_wasted_counts_stream_matches_batch_local(spark, local_log_dir):
     }
 
 
-def test_error_counts_stream_matches_batch(spark, log_dir):
+def _error_counts_stream_vs_batch(spark, log_dir):
+    """Streaming error counts == the batch ``error_summary`` rows, keyed by
+    source_file."""
     from hadoop_jobanalyzer_spark.operators import error_summary
     from hadoop_jobanalyzer_spark.streaming.history_stream import error_counts_stream
 
@@ -231,14 +279,30 @@ def test_error_counts_stream_matches_batch(spark, log_dir):
     from collections import Counter
 
     got, want = Counter(), Counter()
+    key = ["source_file", "task_type", "task_status", "error_class"]
     for r in spark.table(name).collect():
-        got[(r["task_type"], r["task_status"], r["error_class"])] += r["n_attempts"]
+        got[tuple(r[c] for c in key)] += r["n_attempts"]
     for r in error_summary(load_history(spark, log_dir)).collect():
-        want[(r["task_type"], r["task_status"], r["error_class"])] += r["n_attempts"]
-    assert got == want and sum(got.values()) > 100
+        want[tuple(r[c] for c in key)] += r["n_attempts"]
+    assert got == want
+    return got
 
 
-def test_enrich_attempts_stream_static_join(spark, log_dir):
+def test_error_counts_stream_matches_batch(spark, log_dir):
+    got = _error_counts_stream_vs_batch(spark, log_dir)
+    assert sum(got.values()) > 100
+
+
+def test_error_counts_stream_matches_batch_local(spark, local_log_dir):
+    got = _error_counts_stream_vs_batch(spark, local_log_dir)
+    by_file = {(os.path.basename(k[0]),) + k[1:]: n for k, n in got.items()}
+    assert by_file == {
+        ("tiny_log.txt", "MAP", "FAILED", "java.lang.OutOfMemoryError"): 1,
+        ("failed_log.txt", "MAP", "FAILED", "java.io.IOException"): 1,
+    }
+
+
+def _enrich_attempts_stream_vs_batch(spark, log_dir):
     """Stream-static join: every streamed attempt picks up its job's user
     from the static jobs view; counts match the raw attempt-event count."""
     from hadoop_jobanalyzer_spark.streaming.history_stream import (
@@ -254,8 +318,16 @@ def test_enrich_attempts_stream_static_join(spark, log_dir):
         "event IN ('MapAttempt', 'ReduceAttempt')"
     ).count()
     assert out.count() == n_events
-    users = {r["user"] for r in out.select("user").distinct().collect()}
-    assert users == {"kbhatia", "hadoop"}  # every row enriched, none null
+    return {r["user"] for r in out.select("user").distinct().collect()}
+
+
+def test_enrich_attempts_stream_static_join(spark, log_dir):
+    # every row enriched, none null
+    assert _enrich_attempts_stream_vs_batch(spark, log_dir) == {"kbhatia", "hadoop"}
+
+
+def test_enrich_attempts_stream_static_join_local(spark, local_log_dir):
+    assert _enrich_attempts_stream_vs_batch(spark, local_log_dir) == {"alice", "bob"}
 
 
 def test_history_stream_all_lists_every_public_function():
