@@ -16,26 +16,32 @@ Time-scaling semantics, pinned from the reference goldens (SURVEY.md §2.9):
 README/vis goldens were produced at) instead of the reference's three
 hard-coded constants (1e6 CLI / 1e3 py / 1e2 CGI — SURVEY.md §1.2).
 
-All aggregations are partial-aggregate-friendly (plain hash aggs); the only
-shuffles are groupBy(taskid) and the task<->final-attempt equi-join, both on
-the same key so AQE can coalesce. The 1-row per-job scalars
-(all-maps-complete) are joined back via a broadcast.
+Attempts reach the per-task reports through one aggregate,
+:func:`_task_fold` (per task: the attempt count and the final attempt's
+SHUFFLE_FINISHED and FINISH_TIME), joined to the tasks once. Per-job values
+are conditional aggregates (``job_summary``) or a window (``reduce_table``'s
+all-maps-complete) over the job's finished tasks, so no per-job aggregate
+is joined back onto per-task rows. A per-job lookup costs its stages, not
+its data, so every exchange saved here is latency saved
+(``tests/test_plan_quality.py`` caps them).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.window import Window
 
 from hadoop_jobanalyzer_spark.functions.counters import counter_value
 from hadoop_jobanalyzer_spark.sources.job_history import (
     HistoryViews,
     error_class,
-    final_attempts,
+    final_eligible,
     not_setup_cleanup,
     with_final_flag,
 )
 
 _JOB_KEY = ["source_file", "jobid"]
+_TASK_KEY = [*_JOB_KEY, "taskid"]
 
 
 def _abs(ts: Column, scale: int) -> Column:
@@ -48,19 +54,26 @@ def _dur(end: Column, start: Column, scale: int) -> Column:
     return F.floor((end - start) / F.lit(scale))
 
 
-def _num_attempts(attempts: DataFrame) -> DataFrame:
-    """NUM_ATTEMPTS per task = distinct attempt ids seen (SURVEY.md A2/O3;
-    bin/job_history:246-254)."""
-    return attempts.groupBy(*_JOB_KEY, "taskid").agg(
-        F.countDistinct("attempt_id").alias("num_attempts")
+def _task_fold(attempts: DataFrame) -> DataFrame:
+    """Per task: ``num_attempts`` (distinct attempt ids, SURVEY.md A2/O3;
+    bin/job_history:246-254) and the final attempt's SHUFFLE_FINISHED
+    (``_sh``) and FINISH_TIME (``_fin``). Final is :func:`with_final_flag`'s
+    rule, the eligible attempt with the largest ``finish_seq`` (a record
+    index: no ties); ``max_by`` skips NULL orderings, so a task with no
+    eligible attempt gets NULLs."""
+    fseq = F.when(final_eligible(), F.col("finish_seq"))
+    return attempts.groupBy(*_TASK_KEY).agg(
+        F.countDistinct("attempt_id").alias("num_attempts"),
+        F.max_by("shuffle_finished", fseq).alias("_sh"),
+        F.max_by("finish_time", fseq).alias("_fin"),
     )
 
 
-def _finished(tasks: DataFrame, task_type: str) -> DataFrame:
-    """Tasks of one type with a FINISH_TIME (reference null-finish filter F6,
-    bin/job_history:397,410-412,443)."""
+def _finished(tasks: DataFrame, *task_types: str) -> DataFrame:
+    """Tasks of the given types with a FINISH_TIME (reference null-finish
+    filter F6, bin/job_history:397,410-412,443)."""
     return tasks.filter(
-        (F.col("task_type") == task_type) & F.col("finish_time").isNotNull()
+        F.col("task_type").isin(*task_types) & F.col("finish_time").isNotNull()
     )
 
 
@@ -69,43 +82,33 @@ def job_summary(views: HistoryViews, scale: int = 1000) -> DataFrame:
 
     Unlike the reference it does not bail out on non-SUCCESS jobs (null-safe
     avgs instead — SURVEY.md §2.9 decisions) and computes all statistics in
-    one pass.
+    one pass: one group-by over the job's finished MAP and REDUCE tasks,
+    with conditional aggregates per type. A job with no finished task of a
+    type has NULL ``num_maps``/``num_reduces``, as a left join would give.
     """
-    finals = final_attempts(views.attempts)
-
-    map_stats = (
-        _finished(views.tasks, "MAP")
-        .groupBy(*_JOB_KEY)
-        .agg(
-            F.count("*").alias("num_maps"),
-            F.avg(_dur(F.col("finish_time"), F.col("start_time"), scale)).alias(
-                "avg_map_len"
-            ),
-            F.max(_abs(F.col("finish_time"), scale)).alias("all_maps_complete"),
-        )
+    is_map = F.col("task_type") == "MAP"
+    is_red = F.col("task_type") == "REDUCE"
+    dur = _dur(F.col("finish_time"), F.col("start_time"), scale)
+    # avg shuffle reads each finished reduce task's final-attempt
+    # SHUFFLE_FINISHED (reference dict lookup -> the fold, SURVEY.md J1/A5)
+    shuffle_len = F.floor(
+        (_abs(F.col("_sh"), scale) * scale - F.col("start_time")) / F.lit(scale)
     )
-
-    # avg shuffle joins each finished reduce task to its final attempt's
-    # SHUFFLE_FINISHED (reference dict lookup -> equi-join, SURVEY.md J1/A5).
-    reduce_stats = (
-        _finished(views.tasks, "REDUCE")
-        .join(
-            finals.select(*_JOB_KEY, "taskid", "shuffle_finished"),
-            [*_JOB_KEY, "taskid"],
-            "left",
-        )
+    n_maps = F.count(F.when(is_map, 1))
+    n_reduces = F.count(F.when(is_red, 1))
+    stats = (
+        _finished(views.tasks, "MAP", "REDUCE")
+        .join(_task_fold(views.attempts), _TASK_KEY, "left")
         .groupBy(*_JOB_KEY)
         .agg(
-            F.count("*").alias("num_reduces"),
-            F.avg(
-                F.floor(
-                    (_abs(F.col("shuffle_finished"), scale) * scale - F.col("start_time"))
-                    / F.lit(scale)
-                )
-            ).alias("avg_shuffle_len"),
-            F.avg(_dur(F.col("finish_time"), F.col("start_time"), scale)).alias(
-                "avg_reduce_len"
+            F.when(n_maps > 0, n_maps).alias("num_maps"),
+            F.avg(F.when(is_map, dur)).alias("avg_map_len"),
+            F.max(F.when(is_map, _abs(F.col("finish_time"), scale))).alias(
+                "all_maps_complete"
             ),
+            F.when(n_reduces > 0, n_reduces).alias("num_reduces"),
+            F.avg(F.when(is_red, shuffle_len)).alias("avg_shuffle_len"),
+            F.avg(F.when(is_red, dur)).alias("avg_reduce_len"),
         )
     )
 
@@ -126,8 +129,7 @@ def job_summary(views: HistoryViews, scale: int = 1000) -> DataFrame:
             "failed_reduces",
             _dur(F.col("finish_time"), F.col("launch_time"), scale).alias("total_time"),
         )
-        .join(F.broadcast(map_stats), _JOB_KEY, "left")
-        .join(F.broadcast(reduce_stats), _JOB_KEY, "left")
+        .join(F.broadcast(stats), _JOB_KEY, "left")
     )
 
 
@@ -136,7 +138,7 @@ def map_table(views: HistoryViews, scale: int = 1000) -> DataFrame:
     ordered by taskid. Golden: ``vis/grap/map.d`` (512 rows x 5 cols)."""
     return (
         _finished(views.tasks, "MAP")
-        .join(_num_attempts(views.attempts), [*_JOB_KEY, "taskid"], "left")
+        .join(_task_fold(views.attempts), _TASK_KEY, "left")
         .select(
             *_JOB_KEY,
             "taskid",
@@ -153,20 +155,18 @@ def reduce_table(views: HistoryViews, scale: int = 1000) -> DataFrame:
     """The ``-r`` report (bin/job_history:438-458): per-reduce-task table with
     the job-wide all-maps-complete instant and the final attempt's
     shuffle-finish. 7 columns (code wins over the README's 6 — SURVEY.md §2.9).
+
+    All-maps-complete is a window over the job's finished MAP and REDUCE
+    tasks, taken before the filter to REDUCE.
     """
-    all_maps = (
-        _finished(views.tasks, "MAP")
-        .groupBy(*_JOB_KEY)
-        .agg(F.max(_abs(F.col("finish_time"), scale)).alias("maps_complete"))
-    )
-    finals = final_attempts(views.attempts).select(
-        *_JOB_KEY, "taskid", F.col("shuffle_finished").alias("_sh")
-    )
+    maps_complete = F.max(
+        F.when(F.col("task_type") == "MAP", _abs(F.col("finish_time"), scale))
+    ).over(Window.partitionBy(*_JOB_KEY))
     return (
-        _finished(views.tasks, "REDUCE")
-        .join(_num_attempts(views.attempts), [*_JOB_KEY, "taskid"], "left")
-        .join(finals, [*_JOB_KEY, "taskid"], "left")
-        .join(F.broadcast(all_maps), _JOB_KEY, "left")
+        _finished(views.tasks, "MAP", "REDUCE")
+        .select("*", maps_complete.alias("maps_complete"))
+        .filter(F.col("task_type") == "REDUCE")
+        .join(_task_fold(views.attempts), _TASK_KEY, "left")
         .select(
             *_JOB_KEY,
             "taskid",
@@ -190,17 +190,11 @@ def reduce_bytes_table(views: HistoryViews, scale: int = 1000) -> DataFrame:
         counter_value(F.col("counters"), "FileSystemCounters", "HDFS_BYTES_WRITTEN"),
         F.lit(0),
     )
-    finals = final_attempts(views.attempts).select(
-        *_JOB_KEY,
-        "taskid",
-        F.col("shuffle_finished").alias("_sh"),
-        F.col("finish_time").alias("_fin"),
-    )
     submits = views.jobs.select(*_JOB_KEY, F.col("submit_time").alias("_submit"))
     return (
         views.tasks.filter((F.col("task_type") == "REDUCE") & F.col("counters").isNotNull())
-        .select(*_JOB_KEY, "taskid", bytes_col.alias("reduce_output_bytes"))
-        .join(finals, [*_JOB_KEY, "taskid"], "left")
+        .select(*_TASK_KEY, bytes_col.alias("reduce_output_bytes"))
+        .join(_task_fold(views.attempts), _TASK_KEY, "left")
         .join(F.broadcast(submits), _JOB_KEY, "left")
         .select(
             *_JOB_KEY,

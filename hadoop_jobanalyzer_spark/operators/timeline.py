@@ -18,27 +18,24 @@ All timestamps are bucketed ``floor(ts/scale)`` *before* arithmetic (the
 Python frontend's consistent convention; Groovy's mixed BigDecimal behavior
 differs by at most one bucket and is not golden-tested).
 
-Scale design — one dense spine, two ways to fill it:
+Scale design — two ways to fill the dense ``0..range`` rows:
 
-* ``impl="sweep"`` (default): each interval becomes two delta rows
-  (+1 at t0, -1 at t1+1), summed per bucket into a sparse aggregate; after
-  the spine join a cumulative-sum window partitioned by job turns deltas
-  into running concurrency. Cost: O(attempts) + O(range) rows per job —
-  *independent of task duration*, so a 10-hour task costs the same as a
-  10-second one. Jobs are the unit of parallelism (the 100 TB case is
-  millions of logs); one job's spine lives in one window partition,
-  bounded by the guard below.
+* ``impl="sweep"`` (default): change points. Each interval adds +1 at t0
+  and -1 at t1+1; a per-job running sum of the per-bucket deltas is the
+  concurrency from each change point to the next, and each change point
+  expands to its run of buckets. Cost: O(attempts) + O(range) rows per
+  job, *independent of task duration*. The attempts are shuffled once, by
+  job; the final-attempt window, the delta group-by and the running-sum
+  window all reuse that partitioning. Jobs are the unit of parallelism
+  (the 100 TB case is millions of logs); one job's change points live in
+  one window partition, bounded by the guard below.
 * ``impl="explode"``: the literal ``explode(sequence(t0, t1))`` histogram —
-  O(sum of interval lengths) rows, already counts per bucket. Kept as an
-  independently-derived cross-check (property tests assert both agree)
-  and for tiny inputs.
-
-Either aggregate is sparse (buckets nothing touches are absent);
-:func:`timeline` builds the dense ``0..range`` spine once and left-joins
-the aggregate onto it once.
+  O(sum of interval lengths) rows — left-joined onto a dense spine. Kept
+  as an independently-derived cross-check (tests assert both agree) and
+  for tiny inputs.
 
 Guard (BASELINE.md "timeline scale guard"): a per-job coarsening factor
-``k = ceil((range+1)/max_buckets)`` widens buckets so the spine never
+``k = ceil((range+1)/max_buckets)`` widens buckets so a job's timeline never
 exceeds ``max_buckets`` rows regardless of job duration; ``k`` folds into
 the same floor arithmetic (k=1 leaves reference semantics untouched).
 """
@@ -72,9 +69,10 @@ def timeline_intervals(views: HistoryViews, scale: int = 1000) -> DataFrame:
     )
 
     # the final flag is computed over every attempt, before the start-time
-    # filter below could hide a task's last SUCCESS
+    # filter below could hide a task's last SUCCESS; the one repartition by
+    # job serves the flag's window and every per-job step of timeline()
     att = (
-        with_final_flag(views.attempts)
+        with_final_flag(views.attempts.repartition(*_JOB_KEY))
         .filter(
             not_setup_cleanup()
             & F.col("start_time").isNotNull()
@@ -89,10 +87,11 @@ def timeline_intervals(views: HistoryViews, scale: int = 1000) -> DataFrame:
     sort_s = _abs(F.col("sort_finished"), scale)
     submit, finish = F.col("_submit"), F.col("_finish")
 
+    # t0 >= 0, and t1 <= range because hi is capped at the job's finish
     def iv(series: str, lo: Column, hi: Column) -> Column:
         return F.struct(
             F.lit(series).alias("series"),
-            (lo - submit).alias("t0"),
+            F.greatest(lo - submit, F.lit(0)).alias("t0"),
             (F.least(hi, finish) - submit).alias("t1"),
         )
 
@@ -108,37 +107,20 @@ def timeline_intervals(views: HistoryViews, scale: int = 1000) -> DataFrame:
         F.when(is_red & ~final, iv("waste", start_s, end_s)),
     )
 
-    exploded = att.select(
-        *_JOB_KEY,
-        "attempt_id",
-        (finish - submit).alias("range"),
-        F.explode(phases).alias("_iv"),
-    ).filter(F.col("_iv").isNotNull() & F.col("_iv.t1").isNotNull())
-
-    return (
-        exploded.select(
-            *_JOB_KEY,
-            "attempt_id",
-            "range",
-            F.col("_iv.series").alias("series"),
-            F.greatest(F.col("_iv.t0"), F.lit(0)).alias("t0"),
-            F.least(F.col("_iv.t1"), F.col("range")).alias("t1"),
-        )
-        .filter(F.col("t1") >= F.col("t0"))
-    )
+    # a phase that does not apply is a NULL struct: inline makes it a row of
+    # NULLs, which the filter drops
+    return att.select(
+        *_JOB_KEY, "attempt_id", (finish - submit).alias("range"), F.inline(phases)
+    ).filter(F.col("t1") >= F.col("t0"))
 
 
 def _coarsen(intervals: DataFrame, max_buckets: int) -> DataFrame:
-    """Per-job bucket widening so the spine stays <= max_buckets rows."""
-    k = F.greatest(
-        F.ceil((F.col("range") + 1) / F.lit(max_buckets)), F.lit(1)
-    ).alias("_k")
-    return (
-        intervals.withColumn("_k", k)
-        .withColumn("t0", F.floor(F.col("t0") / F.col("_k")))
-        .withColumn("t1", F.floor(F.col("t1") / F.col("_k")))
-        .withColumn("range", F.floor(F.col("range") / F.col("_k")))
-        .drop("_k")
+    """Per-job bucket widening so the timeline stays <= max_buckets rows."""
+    k = F.greatest(F.ceil((F.col("range") + 1) / F.lit(max_buckets)), F.lit(1))
+    return intervals.select(
+        *_JOB_KEY,
+        "series",
+        *[F.floor(F.col(c) / k).alias(c) for c in ("range", "t0", "t1")],
     )
 
 
@@ -147,16 +129,6 @@ def _series_sums(value: Column) -> list[Column]:
         F.coalesce(F.sum(F.when(F.col("series") == s, value)), F.lit(0)).alias(s)
         for s in SERIES
     ]
-
-
-def _dense_spine(intervals: DataFrame) -> DataFrame:
-    """One row per (job, t) for t in 0..range — the zeroed dense arrays of
-    bin/job_history:476-482."""
-    return (
-        intervals.groupBy(*_JOB_KEY)
-        .agg(F.max("range").alias("range"))
-        .select(*_JOB_KEY, F.explode(F.sequence(F.lit(0), F.col("range"))).alias("t"))
-    )
 
 
 def timeline(
@@ -168,51 +140,67 @@ def timeline(
     """The timeline report: (source_file, jobid, t, maps, shuffle, merge,
     reduce, waste), dense over t = 0..range, ordered by t."""
     intervals = _coarsen(timeline_intervals(views, scale), max_buckets)
-    dense = [F.coalesce(F.col(s), F.lit(0)) for s in SERIES]
     if impl == "sweep":
-        counts = _sweep_counts(intervals)
-        # running concurrency = cumulative sum of the per-bucket deltas
-        w = Window.partitionBy(*_JOB_KEY).orderBy("t").rowsBetween(
-            Window.unboundedPreceding, 0
-        )
-        dense = [F.sum(c).over(w) for c in dense]
+        dense = _sweep(intervals)
     elif impl == "explode":
-        counts = _explode_counts(intervals)
+        dense = _explode(intervals)
     else:
         raise ValueError(f"unknown timeline impl: {impl!r}")
-    return (
-        _dense_spine(intervals)
-        .join(counts, [*_JOB_KEY, "t"], "left")
-        .select(*_JOB_KEY, "t", *[c.cast("long").alias(s) for c, s in zip(dense, SERIES)])
-        .orderBy(*_JOB_KEY, "t")
+    return dense.select(
+        *_JOB_KEY, "t", *[F.coalesce(s, F.lit(0)).cast("long").alias(s) for s in SERIES]
+    ).orderBy(*_JOB_KEY, "t")
+
+
+def _sweep(intervals: DataFrame) -> DataFrame:
+    """Change points (+1 at t0, -1 at t1+1, 0 at t=0 so a job's first run
+    starts at 0), their per-job running sums, one run of buckets each."""
+
+    def delta(t: Column, d: int) -> Column:
+        return F.struct(t.cast("long").alias("t"), F.lit(d).alias("d"))
+
+    deltas = intervals.select(
+        *_JOB_KEY,
+        "range",
+        "series",
+        F.inline(
+            F.array(delta(F.col("t0"), 1), delta(F.col("t1") + 1, -1), delta(F.lit(0), 0))
+        ),
+    )
+    by_t = Window.partitionBy(*_JOB_KEY).orderBy("t")
+    running = by_t.rowsBetween(Window.unboundedPreceding, 0)
+    # a change point at range+1 ends the job's last run; it starts none
+    runs = (
+        deltas.groupBy(*_JOB_KEY, "range", "t")
+        .agg(*_series_sums(F.col("d")))
+        .filter(F.col("t") <= F.col("range"))
+        .select(
+            *_JOB_KEY,
+            "t",
+            F.coalesce(F.lead("t").over(by_t), F.col("range") + 1).alias("_next"),
+            *[F.sum(s).over(running).alias(s) for s in SERIES],
+        )
+    )
+    # the generator runs in its own select: Spark plans no generator over a
+    # window expression
+    return runs.select(
+        *_JOB_KEY,
+        F.explode(F.sequence(F.col("t"), F.col("_next") - 1)).alias("t"),
+        *SERIES,
     )
 
 
-def _sweep_counts(intervals: DataFrame) -> DataFrame:
-    """Sparse per-bucket boundary deltas: +1 at t0, -1 at t1+1.
-
-    O(attempts) delta rows; :func:`timeline` turns them into running
-    concurrency with a window partitioned by job (each job's spine is
-    guard-bounded), so scale-out is across jobs.
-    """
-    deltas = intervals.select(
-        *_JOB_KEY,
-        "series",
-        F.explode(
-            F.array(
-                F.struct(F.col("t0").alias("t"), F.lit(1).alias("d")),
-                F.struct((F.col("t1") + 1).alias("t"), F.lit(-1).alias("d")),
-            )
-        ).alias("_e"),
-    ).select(*_JOB_KEY, "series", F.col("_e.t").alias("t"), F.col("_e.d").alias("d"))
-    return deltas.groupBy(*_JOB_KEY, "t").agg(*_series_sums(F.col("d")))
-
-
-def _explode_counts(intervals: DataFrame) -> DataFrame:
+def _explode(intervals: DataFrame) -> DataFrame:
     """Literal per-bucket expansion — the reference's nested loops
-    (bin/job_history:486-527) as explode(sequence)+groupBy. Cross-check impl;
-    cost grows with total interval length."""
+    (bin/job_history:486-527) as explode(sequence)+groupBy, left-joined onto
+    a dense ``0..range`` spine (the zeroed arrays of bin/job_history:476-482).
+    Cross-check impl; cost grows with total interval length."""
     buckets = intervals.select(
         *_JOB_KEY, "series", F.explode(F.sequence(F.col("t0"), F.col("t1"))).alias("t")
     )
-    return buckets.groupBy(*_JOB_KEY, "t").agg(*_series_sums(F.lit(1)))
+    counts = buckets.groupBy(*_JOB_KEY, "t").agg(*_series_sums(F.lit(1)))
+    spine = (
+        intervals.groupBy(*_JOB_KEY)
+        .agg(F.max("range").alias("range"))
+        .select(*_JOB_KEY, F.explode(F.sequence(F.lit(0), F.col("range"))).alias("t"))
+    )
+    return spine.join(counts, [*_JOB_KEY, "t"], "left")

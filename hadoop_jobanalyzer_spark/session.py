@@ -34,6 +34,14 @@ ENGINE_CONF: dict[str, str] = {
     # deletes a checkpoint's files when its frame is GC'd — the same
     # ownership model the localCheckpoint path already has.
     "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
+    # PySpark otherwise wraps every DataFrame and functions call to record
+    # its Python call site, about six py4j round trips per call: building
+    # a per-job lookup's timeline sends 2895 py4j commands with it on and
+    # 1095 with it off. What it gives up: analysis errors lose their
+    # Python-line DataFrame context. PySpark reads this once per process,
+    # at the first wrapped call with a session, so it belongs here and
+    # not in a later spark.conf.set.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 # Scale-adaptive shuffle sizing, OPT-IN: AQE coalescing only MERGES
@@ -58,22 +66,25 @@ def get_spark(
     """Build (or reuse) the engine SparkSession.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` when unset so the
-    driver and bench harness control parallelism with one env var.
+    driver and bench harness control parallelism with one env var. An
+    active session gets only what the call sets (arguments and the
+    SPARK_GRAFT_* knobs), never the defaults again.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
+    live = SparkSession.getActiveSession() is not None
+    conf = {} if live else dict(ENGINE_CONF)
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-
-    builder = SparkSession.builder.appName(app_name).master(master)
-    conf = dict(ENGINE_CONF)
-    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+        shuffle_partitions = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", None if live else 32)
+    if shuffle_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     init_partitions = os.environ.get("SPARK_GRAFT_INIT_PARTITIONS")
     if init_partitions:
         conf["spark.sql.adaptive.coalescePartitions.initialPartitionNum"] = init_partitions
     if extra_conf:
         conf.update(extra_conf)
+    builder = SparkSession.builder.appName(app_name).master(master)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

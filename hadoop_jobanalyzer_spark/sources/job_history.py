@@ -306,10 +306,12 @@ def with_final_flag(attempts: DataFrame) -> DataFrame:
     record order) :func:`final_eligible` finish — the reference's
     ``finalAttempt`` map (bin/job_history:276-279,302-305); every other
     finished attempt is wasted. Never NULL: a status-less attempt is False.
+    The window key holds ``jobid`` (a function of taskid, so the groups are
+    the same) so that input partitioned by job needs no second shuffle.
     """
     eligible = final_eligible()
     final_seq = F.max(F.when(eligible, F.col("finish_seq"))).over(
-        Window.partitionBy("source_file", "taskid")
+        Window.partitionBy("source_file", "jobid", "taskid")
     )
     is_final = F.coalesce(eligible & (F.col("finish_seq") == final_seq), F.lit(False))
     return attempts.withColumn("is_final", is_final)

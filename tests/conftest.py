@@ -75,3 +75,27 @@ def duck(sf_dir):
     con = duck_connect(sf_dir)
     yield con
     con.close()
+
+
+@pytest.fixture(scope="session")
+def one_job_lake_views(spark, tmp_path_factory):
+    """tests/data/tiny_log.txt written to a lake and read back pruned to its
+    one job: what a per-job lookup reads."""
+    from pyspark.sql import functions as F
+
+    from hadoop_jobanalyzer_spark.sources import load_history
+    from hadoop_jobanalyzer_spark.sources.history_lake import (
+        read_history_lake,
+        write_history_lake,
+    )
+    from hadoop_jobanalyzer_spark.sources.job_history import HistoryViews
+
+    tiny = os.path.join(os.path.dirname(__file__), "data", "tiny_log.txt")
+    lake = str(tmp_path_factory.mktemp("one_job_lake"))
+    write_history_lake(load_history(spark, tiny), lake, "overwrite")
+    views = read_history_lake(spark, lake)
+
+    def one(df):
+        return df.filter(F.col("jobid") == "job_202001010000_0001")
+
+    return HistoryViews(None, one(views.jobs), one(views.tasks), one(views.attempts))

@@ -392,6 +392,7 @@ def test_upsert_stream_converges_to_latest(spark, tmp_path):
         pd.DataFrame(rows, columns=["id", "part", "val"]).to_parquet(
             src / f"s{i}.parquet"
         )
+        _space_mtime(src / f"s{i}.parquet", i)
 
     out = str(tmp_path / "tbl")
     ckpt = str(tmp_path / "ckpt")

@@ -245,3 +245,91 @@ def test_wasted_summary_golden_log1(spark, fixture_log1):
     assert row["n_wasted"] >= 139
     assert row["n_wasted"] == len(_reference_wasted(fixture_log1))
     assert row["wasted_time"] is not None and row["wasted_time"] > 0
+
+
+# One reduce task run speculatively (two SUCCESS attempts: the later record
+# wins), one whose final attempt follows a FAILED, a KILLED and a
+# status-less finished attempt, and one that finished with no successful
+# attempt at all.
+SPECULATIVE_LOG = """Meta VERSION="1" .
+Job JOBID="job_202001010000_0009" JOBNAME="spec" USER="carol" SUBMIT_TIME="1000000" .
+Job JOBID="job_202001010000_0009" LAUNCH_TIME="2000000" TOTAL_MAPS="1" TOTAL_REDUCES="3" .
+Task TASKID="task_202001010000_0009_m_000000" TASK_TYPE="MAP" START_TIME="2000000" .
+MapAttempt TASK_TYPE="MAP" TASKID="task_202001010000_0009_m_000000" TASK_ATTEMPT_ID="attempt_202001010000_0009_m_000000_0" START_TIME="2000100" .
+MapAttempt TASK_TYPE="MAP" TASKID="task_202001010000_0009_m_000000" TASK_ATTEMPT_ID="attempt_202001010000_0009_m_000000_0" TASK_STATUS="SUCCESS" FINISH_TIME="3000000" .
+Task TASKID="task_202001010000_0009_m_000000" TASK_TYPE="MAP" TASK_STATUS="SUCCESS" FINISH_TIME="3000100" .
+Task TASKID="task_202001010000_0009_r_000000" TASK_TYPE="REDUCE" START_TIME="3500000" .
+ReduceAttempt TASK_TYPE="REDUCE" TASKID="task_202001010000_0009_r_000000" TASK_ATTEMPT_ID="attempt_202001010000_0009_r_000000_0" START_TIME="3500100" .
+ReduceAttempt TASK_TYPE="REDUCE" TASKID="task_202001010000_0009_r_000000" TASK_ATTEMPT_ID="attempt_202001010000_0009_r_000000_1" START_TIME="4000000" .
+ReduceAttempt TASK_TYPE="REDUCE" TASKID="task_202001010000_0009_r_000000" TASK_ATTEMPT_ID="attempt_202001010000_0009_r_000000_1" TASK_STATUS="SUCCESS" SHUFFLE_FINISHED="5000000" SORT_FINISHED="5500000" FINISH_TIME="6000000" .
+ReduceAttempt TASK_TYPE="REDUCE" TASKID="task_202001010000_0009_r_000000" TASK_ATTEMPT_ID="attempt_202001010000_0009_r_000000_0" TASK_STATUS="SUCCESS" SHUFFLE_FINISHED="7000000" SORT_FINISHED="7500000" FINISH_TIME="8000000" .
+Task TASKID="task_202001010000_0009_r_000000" TASK_TYPE="REDUCE" TASK_STATUS="SUCCESS" FINISH_TIME="8000100" .
+Task TASKID="task_202001010000_0009_r_000001" TASK_TYPE="REDUCE" START_TIME="3500000" .
+ReduceAttempt TASK_TYPE="REDUCE" TASKID="task_202001010000_0009_r_000001" TASK_ATTEMPT_ID="attempt_202001010000_0009_r_000001_0" START_TIME="3500100" .
+ReduceAttempt TASK_TYPE="REDUCE" TASKID="task_202001010000_0009_r_000001" TASK_ATTEMPT_ID="attempt_202001010000_0009_r_000001_0" TASK_STATUS="FAILED" SHUFFLE_FINISHED="4100000" FINISH_TIME="4200000" .
+ReduceAttempt TASK_TYPE="REDUCE" TASKID="task_202001010000_0009_r_000001" TASK_ATTEMPT_ID="attempt_202001010000_0009_r_000001_1" START_TIME="4300000" .
+ReduceAttempt TASK_TYPE="REDUCE" TASKID="task_202001010000_0009_r_000001" TASK_ATTEMPT_ID="attempt_202001010000_0009_r_000001_1" TASK_STATUS="KILLED" SHUFFLE_FINISHED="4400000" FINISH_TIME="4500000" .
+ReduceAttempt TASK_TYPE="REDUCE" TASKID="task_202001010000_0009_r_000001" TASK_ATTEMPT_ID="attempt_202001010000_0009_r_000001_2" START_TIME="4600000" .
+ReduceAttempt TASK_TYPE="REDUCE" TASKID="task_202001010000_0009_r_000001" TASK_ATTEMPT_ID="attempt_202001010000_0009_r_000001_2" SHUFFLE_FINISHED="4700000" FINISH_TIME="4800000" .
+ReduceAttempt TASK_TYPE="REDUCE" TASKID="task_202001010000_0009_r_000001" TASK_ATTEMPT_ID="attempt_202001010000_0009_r_000001_3" START_TIME="4900000" .
+ReduceAttempt TASK_TYPE="REDUCE" TASKID="task_202001010000_0009_r_000001" TASK_ATTEMPT_ID="attempt_202001010000_0009_r_000001_3" TASK_STATUS="SUCCESS" SHUFFLE_FINISHED="6400000" SORT_FINISHED="6500000" FINISH_TIME="6600000" .
+Task TASKID="task_202001010000_0009_r_000001" TASK_TYPE="REDUCE" TASK_STATUS="SUCCESS" FINISH_TIME="6600100" .
+Task TASKID="task_202001010000_0009_r_000002" TASK_TYPE="REDUCE" START_TIME="3500000" .
+ReduceAttempt TASK_TYPE="REDUCE" TASKID="task_202001010000_0009_r_000002" TASK_ATTEMPT_ID="attempt_202001010000_0009_r_000002_0" START_TIME="3500100" .
+ReduceAttempt TASK_TYPE="REDUCE" TASKID="task_202001010000_0009_r_000002" TASK_ATTEMPT_ID="attempt_202001010000_0009_r_000002_0" TASK_STATUS="FAILED" SHUFFLE_FINISHED="3900000" FINISH_TIME="4000000" .
+Task TASKID="task_202001010000_0009_r_000002" TASK_TYPE="REDUCE" TASK_STATUS="FAILED" FINISH_TIME="4000100" .
+Job JOBID="job_202001010000_0009" FINISH_TIME="9000000" JOB_STATUS="SUCCESS" .
+"""
+
+
+@pytest.mark.parametrize(
+    "log", ["tiny_log.txt", "failed_log.txt", "no_status_log.txt", "speculative"]
+)
+def test_task_fold_matches_final_attempts(spark, tmp_path, log):
+    """The per-task fold the reports read (attempt count, final attempt's
+    SHUFFLE_FINISHED) agrees with the attempts view and the
+    ``final_attempts()`` rows, recomputed here in Python."""
+    if log == "speculative":
+        path = tmp_path / "speculative_log.txt"
+        path.write_text(SPECULATIVE_LOG)
+        path = str(path)
+    else:
+        path = os.path.join(os.path.dirname(TINY), log)
+    scale = 1000
+    v = load_history(spark, path)
+    n_attempts: dict[str, set] = {}
+    for r in v.attempts.collect():
+        n_attempts.setdefault(r["taskid"], set()).add(r["attempt_id"])
+    final_sh = {r["taskid"]: r["shuffle_finished"] for r in v.final_attempts().collect()}
+    reduces = [
+        r for r in v.tasks.collect()
+        if r["task_type"] == "REDUCE" and r["finish_time"] is not None
+    ]
+
+    def floor_or_none(ts):
+        return None if ts is None else ts // scale
+
+    got = {
+        r["taskid"]: (r["shuffle_finish"], r["num_attempts"])
+        for r in reduce_table(v, scale=scale).collect()
+    }
+    assert got == {
+        t["taskid"]: (floor_or_none(final_sh.get(t["taskid"])), len(n_attempts.get(t["taskid"], ())))
+        for t in reduces
+    }
+
+    lens = [
+        (final_sh[t["taskid"]] // scale * scale - t["start_time"]) // scale
+        for t in reduces
+        if final_sh.get(t["taskid"]) is not None and t["start_time"] is not None
+    ]
+    (summary,) = job_summary(v, scale=scale).collect()
+    if lens:
+        assert summary["avg_shuffle_len"] == pytest.approx(sum(lens) / len(lens))
+    else:
+        assert summary["avg_shuffle_len"] is None
+
+    if log == "speculative":
+        t = "task_202001010000_0009_r_00000"
+        assert got == {t + "0": (7000, 2), t + "1": (6400, 4), t + "2": (None, 1)}
+        assert summary["avg_shuffle_len"] == pytest.approx((3500 + 2900) / 2)

@@ -151,10 +151,11 @@ def _n_exchanges(plan: str) -> int:
 
 
 def test_timeline_plan_shape(spark):
-    """Canary for the timeline's shape: one final-attempt window shared by
-    the intervals, one dense spine and one spine join. The log is scanned
-    once per use of the intervals (deltas, spine); a second spine or a join
-    back to the final attempts shows up as extra scans and shuffles."""
+    """Canary for the timeline's shape: the attempts are shuffled once by
+    job, and the final-attempt window, the delta group-by and the
+    running-sum window all reuse that exchange; the log is scanned once for
+    the attempts and once for the jobs' bounds. A dense spine, a join or a
+    second final-attempt shuffle shows up as extra scans and exchanges."""
     import os
     import re
 
@@ -163,8 +164,67 @@ def test_timeline_plan_shape(spark):
     tiny = os.path.join(os.path.dirname(__file__), "data", "tiny_log.txt")
     plan = _plan(timeline(load_history(spark, tiny)))
     n_scans = len(re.findall(r"^\(\d+\) Scan text", plan, re.M))
-    assert n_scans <= 4, f"{n_scans} text scans\n{plan}"
-    assert _n_exchanges(plan) <= 9, f"{_n_exchanges(plan)} exchanges\n{plan}"
+    assert n_scans <= 2, f"{n_scans} text scans\n{plan}"
+    assert _n_exchanges(plan) <= 4, f"{_n_exchanges(plan)} exchanges\n{plan}"
+
+
+@pytest.mark.parametrize(
+    "report,max_exchanges,max_broadcasts",
+    [
+        # tasks joined to the per-task attempt fold, one per-job group-by,
+        # broadcast onto the jobs row
+        ("job_summary", 2, 2),
+        # the all-maps-complete window, the fold, the join, the final sort
+        ("reduce_table", 4, 1),
+        # one repartition by job shared by the final flag, the delta
+        # group-by and the running-sum window, plus the final sort
+        ("timeline", 2, 1),
+    ],
+)
+def test_lookup_plan_exchanges(spark, one_job_lake_views, report, max_exchanges, max_broadcasts):
+    """A per-job lookup is bound by per-stage overhead, so each of its
+    reports keeps its shuffle and broadcast count: an extra per-job
+    aggregate joined back, or a second attempts shuffle, fails here."""
+    import re
+
+    from hadoop_jobanalyzer_spark import operators
+
+    plan = _plan(getattr(operators, report)(one_job_lake_views))
+    n = _n_exchanges(plan)
+    n_bc = len(re.findall(r"^\(\d+\) BroadcastExchange", plan, re.M))
+    assert n <= max_exchanges, f"{report}: {n} exchanges\n{plan}"
+    assert n_bc <= max_broadcasts, f"{report}: {n_bc} broadcast exchanges\n{plan}"
+
+
+def test_lookup_timeline_build_py4j_budget(spark, one_job_lake_views, monkeypatch):
+    """Building a lookup's timeline (no action) stays under 1357 py4j
+    commands, half of what it took with PySpark's per-call call-site
+    capture on (2714). Each DataFrame or functions call then cost about
+    six extra round trips; a regression in the session conf or a plan
+    built with many more calls fails here."""
+    import threading
+
+    import py4j.java_gateway
+    import py4j.protocol
+
+    sent = [0]
+    send = py4j.java_gateway.GatewayClient.send_command
+    builder = threading.get_ident()
+
+    # only the build's own commands: py4j also sends the deletes of
+    # collected Java objects through this call, from whichever thread
+    # collects them
+    def counting(self, command, *args, **kwargs):
+        if threading.get_ident() == builder and not command.startswith(
+            py4j.protocol.MEMORY_COMMAND_NAME
+        ):
+            sent[0] += 1
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(py4j.java_gateway.GatewayClient, "send_command", counting)
+    timeline(one_job_lake_views)
+    monkeypatch.undo()
+    assert 0 < sent[0] <= 1357, f"{sent[0]} py4j commands"
 
 
 @pytest.mark.parametrize(

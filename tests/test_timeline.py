@@ -70,15 +70,32 @@ def test_sweep_matches_explode_fixture(spark, fixture_log1):
     assert diff.count() == 0
 
 
-def test_sweep_matches_explode_local_logs(spark):
+def test_sweep_matches_explode_local_logs(spark, tmp_path, one_job_lake_views):
     """Both strategies agree on every in-repo log at once (several jobs,
-    a failed job, a status-less attempt), at two scales."""
+    a failed job, a status-less attempt), at two scales, with and without
+    coarsening; on the tiny log read back from a lake and pruned to its
+    one job (a per-job lookup's input); and on the tiny log with the job
+    finishing before its reduce does, so an interval is clamped to end at
+    the job's last bucket."""
     v = load_history(spark, os.path.dirname(TINY))
-    for scale in (100, 1000):
-        sweep = timeline(v, scale=scale, impl="sweep")
-        explode = timeline(v, scale=scale, impl="explode")
-        assert sweep.collect() == explode.collect()
-        assert sweep.select("source_file").distinct().count() == 3
+    clamped = tmp_path / "clamped_log.txt"
+    with open(TINY) as f:
+        clamped.write_text(
+            f.read().replace('FINISH_TIME="12000000" JOB_STATUS', 'FINISH_TIME="11000000" JOB_STATUS')
+        )
+    inputs = ((v, 3), (one_job_lake_views, 1), (load_history(spark, str(clamped)), 1))
+    for views, n_files in inputs:
+        for scale in (100, 1000):
+            for max_buckets in (10_000_000, 37):
+                sweep = timeline(views, scale=scale, max_buckets=max_buckets, impl="sweep")
+                explode = timeline(views, scale=scale, max_buckets=max_buckets, impl="explode")
+                rows = sweep.collect()
+                assert rows == explode.collect()
+                assert len({r["source_file"] for r in rows}) == n_files
+                if max_buckets == 37:
+                    # every job's range is coarsened to at most 37 buckets
+                    assert len(rows) <= 37 * n_files
+                    assert max(r["t"] for r in rows) <= 36
 
 
 def test_timeline_invariant_sums(spark, fixture_log1):
