@@ -177,14 +177,11 @@ def main(argv: list[str] | None = None) -> int:
             if args.explain not in QUERIES:
                 print(f"unknown query: {args.explain} (see --list-queries)", file=sys.stderr)
                 return 2
-            import contextlib
-            import io
             import re
 
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                QUERIES[args.explain][0](spark, sf_dir).explain("formatted")
-            plan = buf.getvalue()
+            from hadoop_jobanalyzer_spark.util import formatted_plan
+
+            plan = formatted_plan(QUERIES[args.explain][0](spark, sf_dir))
             print(plan)
             n_ex = len(re.findall(r"^\(\d+\) Exchange", plan, re.M))
             pushed = len(re.findall(r"PushedFilters: \[[^\]]", plan))

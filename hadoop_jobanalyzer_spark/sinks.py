@@ -127,17 +127,13 @@ def merge_parquet(
     # path that is still being read by the same plan; the checkpoint bounds
     # that read to the affected partitions only
     merged = keep.unionByName(updates.select(*existing.columns)).transform(materialize_eager)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            merged.repartition(F.col(partition_col))
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        merged.repartition(F.col(partition_col))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(path)
+    )
 
 
 def compact_partitions(
@@ -184,15 +180,14 @@ def compact_partitions(
     # hash-repartition by the partition column: each fragmented value's
     # rows land in one task -> one output file per directory
     compacted = existing.repartition(F.col(partition_col)).transform(materialize_eager)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        writer = compacted.write.mode("overwrite").partitionBy(partition_col)
-        if target_records_per_file is not None:
-            writer = writer.option("maxRecordsPerFile", target_records_per_file)
-        writer.parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    writer = (
+        compacted.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+    )
+    if target_records_per_file is not None:
+        writer = writer.option("maxRecordsPerFile", target_records_per_file)
+    writer.parquet(path)
     return frag
 
 

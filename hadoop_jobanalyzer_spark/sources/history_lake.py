@@ -1,14 +1,22 @@
-"""Persist parsed job history as a partitioned parquet lake.
+"""Persist parsed job history as a jobid-clustered parquet lake.
 
 The multi-job shape (SURVEY.md §7 milestone 5): parse once, persist the
-typed views as parquet partitioned by ``jobid``, and run every report over
-the lake instead of re-parsing raw logs. At fleet scale (millions of job
-logs) this is the difference between O(raw text) and O(pruned columnar):
+typed views as parquet, and run every report over the lake instead of
+re-parsing raw logs. At fleet scale (millions of job logs) this is the
+difference between O(raw text) and O(skipped columnar):
 
-* per-job queries prune to one partition (``PartitionFilters`` in the
-  scan — verified by tests);
+* each view is range-partitioned and sorted by ``jobid`` before the
+  write, so the files of one write (and the row groups in them) hold
+  contiguous, disjoint jobid ranges, and files are sized by AQE's
+  advisory partition size rather than by the number of jobs — no
+  ``jobid=`` directories, no small-file spread to compact;
+* a per-job query's ``jobid == X`` filter is a pushed parquet filter
+  (``PushedFilters`` in the scan — verified by tests): row groups whose
+  footer min/max range excludes X are skipped unread;
 * cross-job aggregations read only the columns they touch;
-* new logs append their partitions without touching existing ones.
+* ``append`` adds files next to the existing ones. Reprocessing a job
+  means rewriting the view (``mode="overwrite"``); there is no per-job
+  in-place replacement.
 """
 
 from __future__ import annotations
@@ -23,16 +31,24 @@ _VIEW_NAMES = ("jobs", "tasks", "attempts")
 
 
 def write_history_lake(views: HistoryViews, path: str, mode: str = "append") -> None:
-    """Persist jobs/tasks/attempts partitioned by jobid.
+    """Persist jobs/tasks/attempts, each clustered by jobid.
 
-    ``append`` is the incremental-ingest default: each newly parsed batch
-    of logs adds its job partitions. Dynamic partition overwrite
-    (``mode="overwrite"`` with spark.sql.sources.partitionOverwriteMode=
-    dynamic) reprocesses selected jobs in place.
+    Each view is range-partitioned and sorted by ``jobid``, so the files
+    of one write cover disjoint jobid ranges; AQE coalesces the range
+    partitions to its advisory size, which sets the file size. ``append``
+    (the incremental-ingest default) adds one write's files to the view;
+    ``overwrite`` replaces the whole view, which is how a job is
+    reprocessed. A write of empty views still leaves a schema-carrying
+    file, so the lake reopens.
     """
     for name in _VIEW_NAMES:
-        df = getattr(views, name)
-        df.write.mode(mode).partitionBy("jobid").parquet(os.path.join(path, name))
+        (
+            getattr(views, name)
+            .repartitionByRange("jobid")
+            .sortWithinPartitions("jobid")
+            .write.mode(mode)
+            .parquet(os.path.join(path, name))
+        )
 
 
 def read_history_lake(spark: SparkSession, path: str) -> HistoryViews:
@@ -42,81 +58,6 @@ def read_history_lake(spark: SparkSession, path: str) -> HistoryViews:
     tasks = spark.read.parquet(os.path.join(path, "tasks"))
     attempts = spark.read.parquet(os.path.join(path, "attempts"))
     return HistoryViews(records=None, jobs=jobs, tasks=tasks, attempts=attempts)
-
-
-def compact_lake_view(
-    spark: SparkSession,
-    path: str,
-    view: str,
-    files_per_partition: int = 1,
-) -> tuple[int, int]:
-    """Compact one lake view's small files.
-
-    Fleet-scale append ingest accumulates one-file-per-batch partitions; a
-    scan then pays one task + one footer read per tiny file. Compaction
-    rewrites each ``jobid`` partition to (at most) ``files_per_partition``
-    files: rows are range-partitioned on (jobid, salt) with salt =
-    hash(row) % files_per_partition and one target partition per
-    (jobid, salt) group, so rows of one jobid actually land in
-    ``files_per_partition`` distinct tasks (a bare ``repartition(n,
-    "jobid")`` would put the whole jobid in a single task regardless of
-    ``n``, and hash-partitioning on the salt can collide salt groups into
-    one task). Parallelism scales with #jobs x files_per_partition.
-
-    Crash safety: the compacted view is written to a sibling ``.compacting``
-    directory, row counts are verified, and the result is swapped in with
-    two filesystem renames — the original is never modified until the
-    replacement is complete, so a mid-write failure leaves the live view
-    intact. The swap replaces the WHOLE view: do not run compaction
-    concurrently with appends to the same view (appends landing between
-    read and swap would be dropped).
-
-    Returns (files_before, files_after) for observability.
-    """
-    from pyspark.sql import functions as F
-
-    view_path = os.path.join(path, view)
-    tmp_path = view_path + ".compacting"
-    old_path = view_path + ".old"
-
-    # Hadoop FileSystem globbing, not local glob — the counts must be
-    # correct for hdfs:///s3a:// paths too (the swap below already is)
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.FileSystem.get(spark._jsc.hadoopConfiguration())
-    hpath = jvm.org.apache.hadoop.fs.Path
-
-    def _count(p: str) -> int:
-        statuses = fs.globStatus(hpath(os.path.join(p, "*", "*.parquet")))
-        return len(statuses) if statuses is not None else 0
-
-    before = _count(view_path)
-    df = spark.read.parquet(view_path)
-    n_rows = df.count()
-    n_jobs = df.select("jobid").distinct().count()  # column-pruned scan
-    # hash() rejects MAP-typed input anywhere in the column (counters is
-    # array<struct<..,map<..>>>) — salt on the map-free columns only
-    hashable = [c for c, t in df.dtypes if "map<" not in t]
-    salt = F.pmod(F.abs(F.hash(*hashable)), F.lit(files_per_partition))
-    (
-        df.withColumn("_salt", salt)
-        .repartitionByRange(max(1, n_jobs * files_per_partition), "jobid", "_salt")
-        .sortWithinPartitions("jobid")
-        .drop("_salt")
-        .write.mode("overwrite")
-        .partitionBy("jobid")
-        .parquet(tmp_path)
-    )
-    if spark.read.parquet(tmp_path).count() != n_rows:  # pragma: no cover
-        raise RuntimeError(f"compaction row-count mismatch for {view_path}; original left in place")
-    # atomic-ish swap via the same Hadoop FileSystem API
-    fs.delete(hpath(old_path), True)
-    if not fs.rename(hpath(view_path), hpath(old_path)):  # pragma: no cover
-        raise RuntimeError(f"compaction swap failed renaming {view_path} aside")
-    if not fs.rename(hpath(tmp_path), hpath(view_path)):  # pragma: no cover
-        fs.rename(hpath(old_path), hpath(view_path))  # roll back
-        raise RuntimeError(f"compaction swap failed installing {tmp_path}; rolled back")
-    fs.delete(hpath(old_path), True)
-    return before, _count(view_path)
 
 
 def read_evolved(spark: SparkSession, path: str):

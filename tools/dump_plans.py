@@ -13,15 +13,13 @@ Usage:
 
 With no names, dumps every registered query. Designed to run from a git
 worktree of an older commit too (for `_before` plans): it only relies on
-the registry and session factory, and degrades gracefully when
-PLAN_CAPTURE does not exist there.
+the registry, the session factory and `util.formatted_plan`, and degrades
+gracefully when PLAN_CAPTURE does not exist there.
 """
 
 from __future__ import annotations
 
 import argparse
-import contextlib
-import io
 import os
 import sys
 
@@ -53,10 +51,7 @@ def main() -> int:
         if has_capture:
             _util.PLAN_CAPTURE = interior
         try:
-            df = fn(spark, args.sf)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
+            plan = _util.formatted_plan(fn(spark, args.sf))
         except Exception as exc:  # keep going; record the failure
             with open(os.path.join(args.out_dir, f"{name}{args.suffix}.txt"), "w") as fh:
                 fh.write(f"EXPLAIN FAILED: {exc!r}\n")
@@ -65,7 +60,7 @@ def main() -> int:
         finally:
             if has_capture:
                 _util.PLAN_CAPTURE = None
-        parts = [f"== {name} — top-level physical plan (sf={args.sf}) ==\n", buf.getvalue()]
+        parts = [f"== {name} — top-level physical plan (sf={args.sf}) ==\n", plan]
         for i, p in enumerate(interior):
             parts.append(
                 f"\n== interior plan {i + 1}/{len(interior)} "

@@ -12,8 +12,6 @@ Usage: python tools/plan_audit.py [sf_dir] > /dev/null  (writes PLAN_AUDIT.md)
 
 from __future__ import annotations
 
-import contextlib
-import io
 import re
 import sys
 import time
@@ -334,13 +332,9 @@ def main() -> int:
         spark.catalog.clearCache()
         _util.PLAN_CAPTURE = interior = []
         try:
-            df = fn(spark, sf_dir)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
+            p = _util.formatted_plan(fn(spark, sf_dir))
         finally:
             _util.PLAN_CAPTURE = None
-        p = buf.getvalue()
         n_ex = len(re.findall(r"^\(\d+\) Exchange", p, re.M))
         bhj = len(re.findall(r"^\(\d+\) BroadcastHashJoin", p, re.M))
         smj = len(re.findall(r"^\(\d+\) SortMergeJoin", p, re.M))
